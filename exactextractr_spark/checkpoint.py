@@ -31,7 +31,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.zonal import build_candidates, coverage_facts
+from .operators.zonal import (
+    backfill,
+    build_candidates,
+    coverage_facts,
+    merge_moments,
+    stats_from_moments,
+)
 from .plans.stats import StatsPlan
 from .sources.tiles import Raster
 
@@ -94,11 +100,8 @@ class ZonalCheckpointer:
                 values_meta=values.meta,
                 emit="moments",
             )
-            partial = moments.groupBy("feature_id").agg(
-                *plan.algebraic_aggs_from_moments()
-            )
             path = os.path.join(self.dir, f"bucket={b}")
-            partial.write.mode("overwrite").parquet(path)
+            merge_moments(moments).write.mode("overwrite").parquet(path)
             n = spark.read.parquet(path).count()
             self.commit_bucket(
                 b,
@@ -114,23 +117,5 @@ class ZonalCheckpointer:
 
         # merge all committed partials (StatsRegistry::merge at rest)
         merged = spark.read.parquet(os.path.join(self.dir, "bucket=*"))
-        moment_cols = [c for c in merged.columns if c.startswith("_sum_")]
-        other = [c for c in merged.columns if c not in moment_cols + ["feature_id"]]
-        aggs = [F.sum(c).alias(c) for c in moment_cols]
-        aggs += [
-            F.min(c).alias(c) if c == "min" else F.max(c).alias(c) for c in other
-        ]
-        total = merged.groupBy("feature_id").agg(*aggs)
-        fin = plan.finalize_columns()
-        result = total.select(
-            "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-        )
-        # features with no facts keep their row (0/NA stats), same as
-        # exact_extract (ref test_exact_extract.R:433-485)
-        base = features.select("feature_id")
-        result = base.join(result, on="feature_id", how="left")
-        fill = {s: 0.0 for s in ("count", "sum", "weighted_count", "weighted_sum")
-                if s in result.columns}
-        if fill:
-            result = result.fillna(fill)
+        result = backfill(stats_from_moments(plan, merged), features, feats_bc)
         return result.orderBy("feature_id")

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tiles import Raster
-from .zonal import build_candidates, coverage_facts
+from .zonal import backfill, build_candidates, coverage_facts, stats_from_freq
 
 
 def coverage_fraction_df(
@@ -49,6 +49,12 @@ def line_cell_lengths_df(
     (feature, traversed cell) with the cell's value and the length of the
     line inside that cell; stats over lines weight by length the way areal
     stats weight by coverage fraction."""
+    cand, feats_bc = build_candidates(values, features, broadcast_features)
+    return _line_lengths(cand, feats_bc, values.meta)
+
+
+def _line_lengths(cand: DataFrame, feats_bc, meta) -> DataFrame:
+    """The line kernel of ``line_cell_lengths_df`` over built candidates."""
     from typing import Iterator
 
     import numpy as np
@@ -59,10 +65,6 @@ def line_cell_lengths_df(
     from ..core.coverage import cell_lengths
     from ..core.grid import Grid
 
-    from .zonal import build_candidates
-
-    cand, feats_bc = build_candidates(values, features, broadcast_features)
-
     schema = T.StructType(
         [
             T.StructField("feature_id", T.LongType(), False),
@@ -71,11 +73,11 @@ def line_cell_lengths_df(
             T.StructField("cell", T.LongType(), False),
         ]
     )
-    raster_xmin = values.meta.xmin
-    raster_ymax = values.meta.ymax
-    raster_width = values.meta.width
-    raster_ymin = values.meta.ymax - values.meta.height * values.meta.dy
-    raster_xmax = values.meta.xmin + values.meta.width * values.meta.dx
+    raster_xmin = meta.xmin
+    raster_ymax = meta.ymax
+    raster_width = meta.width
+    raster_ymin = meta.ymax - meta.height * meta.dy
+    raster_xmax = meta.xmin + meta.width * meta.dx
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math as _math
@@ -187,8 +189,6 @@ def exact_extract_lines(
     count = Σ len, mode = argmax of summed length per value, median/
     quantile = length-weighted interpolation…). Raster-weighted stats are
     refused — the reference has no weighted linear path either."""
-    from pyspark.sql import functions as F
-
     from ..plans.stats import StatsPlan
 
     if isinstance(stats, str):
@@ -199,42 +199,17 @@ def exact_extract_lines(
             f"stats {sorted(set(stats))} are weighted; linear features "
             "have no weighted path (length IS the weight)"
         )
-    facts = line_cell_lengths_df(
-        values, features, broadcast_features=broadcast_features
-    )
+    cand, feats_bc = build_candidates(values, features, broadcast_features)
+    facts = _line_lengths(cand, feats_bc, values.meta)
     # NA-skip contract: nodata cells traversed by the line contribute
     # nothing (same as areal stats ignoring NaN values)
     facts = facts.filter(F.col("v").isNotNull() & ~F.isnan("v"))
     freq = facts.groupBy("feature_id", "v").agg(
         F.sum("length").alias("sum_c"), F.sum("length").alias("sum_cw")
     )
-    result: DataFrame | None = None
-    if plan.algebraic:
-        agg_df = freq.groupBy("feature_id").agg(*plan.algebraic_aggs_from_freq())
-        fcols = plan.finalize_columns()
-        result = agg_df.select(
-            "feature_id", *[fcols[s].alias(s) for s in plan.algebraic]
-        )
     if plan.freq:
-        from .zonal import _freq_stats
-
-        # localCheckpoint, not persist(): blocks released on GC, no cache
-        # leak across repeated calls in a long-lived session
         freq = freq.localCheckpoint(eager=True)
-        fr = _freq_stats(plan, freq)
-        result = fr if result is None else result.join(fr, "feature_id", "full")
-    base = features.select("feature_id")
-    if broadcast_features:
-        # per-feature aggregate is as small as the feature table; only hint
-        # a broadcast when the table was deemed broadcastable to begin with
-        result = base.join(F.broadcast(result), on="feature_id", how="left")
-    else:
-        result = base.join(result, on="feature_id", how="left")
-    fill = {s: 0.0 for s in ("count", "sum") if s in result.columns}
-    if "variety" in result.columns:
-        fill["variety"] = 0
-    if fill:
-        result = result.fillna(fill)
+    result = backfill(stats_from_freq(plan, freq), features, feats_bc)
     return result.orderBy("feature_id") if sort else result
 
 

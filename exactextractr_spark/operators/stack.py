@@ -110,17 +110,21 @@ def _stack_single_pass(
     with its layer) and pivot/join — N layers cost one table scan instead
     of N. Freq stats (mode/median/quantile/frac/...) ride the same single
     scan: one ``emit="freq"`` pass tagged by layer, aggregated once and
-    persisted (features × layers × distinct values — tiny), then each
-    layer's slice routes through the same ``_freq_stats`` the per-layer
-    loop uses (mixed algebraic stats derive from the freq table exactly as
-    ``exact_extract`` does, so results match the fallback). Returns None
+    checkpointed (features × layers × distinct values — tiny), then each
+    layer's slice routes through the same ``stats_from_freq`` the per-layer
+    loop uses, so results match the fallback. Returns None
     when preconditions don't hold (weights, heterogenous sources/grids,
     non-default strategy kwargs) and the caller falls back to the loop."""
-    import pandas as pd
-
     from ..plans.stats import StatsPlan
     from ..sources.tiles import raw_tiles_with_meta
-    from .zonal import FeatureBroadcast, _freq_stats, coverage_facts
+    from .zonal import (
+        backfill,
+        collect_feature_broadcast,
+        coverage_facts,
+        merge_freq,
+        stats_from_freq,
+        stats_from_moments,
+    )
 
     quantiles = kwargs.pop("quantiles", None) or []
     if weights is not None or kwargs or len(values) < 2:
@@ -168,110 +172,57 @@ def _stack_single_pass(
             DataFrame.unionByName,
             [raw_tiles_with_meta(r._raw, layer=r.meta.layer) for r in values],
         )
-    # ONE bounded driver job: limit(200_001).collect() both counts and
-    # fetches — if the limit row comes back the table is too big for the
-    # broadcast path and nothing oversized ever lands on the driver
-    rows = features.select(
-        "feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax"
-    ).limit(200_001).collect()
-    if len(rows) > 200_000:
+    fb = collect_feature_broadcast(features)
+    if fb is None:
         return None
-    spark = features.sparkSession
-    fb = FeatureBroadcast(rows)
-    feats_bc = spark.sparkContext.broadcast(fb)
-    fin = plan.finalize_columns()
-    fill: dict[str, float | int] = {}
+    feats_bc = features.sparkSession.sparkContext.broadcast(fb)
+    # final column name -> stat, for the renames and the zero-fill
+    stat_of: dict[str, str] = {}
 
     def _final_name(col: str, lay: str) -> str:
         if colname_fun is not None:
-            return colname_fun(
+            name = colname_fun(
                 fun_name=col, values=lay, weights=None, fun_value=col,
                 nvalues=len(values), nweights=0,
             )
-        return f"{col}.{lay}"
+        else:
+            name = f"{col}.{lay}"
+        stat_of[name] = col
+        return name
 
     if plan.freq:
         partials = coverage_facts(
             tiles, emit="freq", feats_bc=feats_bc, values_meta=v0.meta,
             by_layer=True,
         )
-        # localCheckpoint, not persist(): computes the kernel scan once and
-        # truncates lineage (the per-layer loop re-reads blocks, never
-        # re-scans), but unlike a CacheManager entry the blocks are released
-        # when this DataFrame is GC'd — no cache leak across repeated calls
-        # in a long-lived session. (On a real cluster prefer a reliable
-        # checkpoint dir if executors use dynamic allocation.)
-        freq_all = (
-            partials.groupBy("feature_id", "layer", "v")
-            .agg(F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw"))
-            .localCheckpoint(eager=True)
-        )
+        # checkpointed ONCE for all layers: the per-layer loop re-reads
+        # blocks, never re-scans (see stats_from_freq). On a real cluster
+        # prefer a reliable checkpoint dir if executors use dynamic
+        # allocation.
+        freq_all = merge_freq(partials, "layer").localCheckpoint(eager=True)
         piv = None
         for lay in layers:
             freq_df = freq_all.filter(F.col("layer") == F.lit(lay)).drop("layer")
-            res = None
-            if plan.algebraic:
-                agg_df = freq_df.groupBy("feature_id").agg(
-                    *plan.algebraic_aggs_from_freq()
-                )
-                res = agg_df.select(
-                    "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-                )
-            fr = _freq_stats(plan, freq_df)
-            res = fr if res is None else res.join(fr, on="feature_id", how="full")
-            for c in list(res.columns):
-                if c == "feature_id":
-                    continue
-                name = _final_name(c, lay)
-                if c in ("count", "sum", "weighted_count", "weighted_sum"):
-                    fill[name] = 0.0
-                elif c == "variety":
-                    fill[name] = 0
-                res = res.withColumnRenamed(c, name)
+            res = stats_from_freq(plan, freq_df)
+            for c in res.columns:
+                if c != "feature_id":
+                    res = res.withColumnRenamed(c, _final_name(c, lay))
             piv = res if piv is None else piv.join(res, on="feature_id", how="full")
     else:
         moments = coverage_facts(
             tiles, emit="moments", feats_bc=feats_bc, values_meta=v0.meta,
             by_layer=True,
         )
-        agg = moments.groupBy("feature_id", "layer").agg(
-            *plan.algebraic_aggs_from_moments()
-        )
-        per_layer = agg.select(
-            "feature_id", "layer", *[fin[s].alias(s) for s in plan.algebraic]
-        )
+        per_layer = stats_from_moments(plan, moments, keys=("feature_id", "layer"))
         piv = per_layer.groupBy("feature_id").pivot("layer", layers).agg(
             *[F.first(s).alias(s) for s in stats]
         )
-        # pivot names columns "{layer}_{stat}"; apply the reference's naming.
-        # Track the zero-fill targets BY FINAL NAME while renaming, so custom
-        # colname_fun names fill identically to the per-layer fallback path.
-        renames = {}
-        for lay, r in zip(layers, values):
+        # pivot names columns "{layer}_{stat}"; apply the reference's naming
+        for lay in layers:
             for s in stats:
                 src = f"{lay}_{s}" if len(stats) > 1 else lay
-                name = _final_name(s, lay)
-                renames[src] = name
-                if s in ("count", "sum", "weighted_count", "weighted_sum"):
-                    fill[name] = 0.0
-                elif s == "variety":
-                    fill[name] = 0
-        for old, new in renames.items():
-            piv = piv.withColumnRenamed(old, new)
-    base = spark.createDataFrame(
-        pd.DataFrame({"feature_id": pd.Series(fb.ids, dtype="int64")})
-    )
-    out = base.join(F.broadcast(piv), on="feature_id", how="left")
-    if fill:
-        # fillna can't address dotted column names; coalesce with backticks
-        out = out.select(
-            *[
-                F.coalesce(F.col(f"`{c}`"), F.lit(fill[c])).alias(c)
-                if c in fill
-                else F.col(f"`{c}`")
-                for c in out.columns
-            ]
-        )
+                piv = piv.withColumnRenamed(src, _final_name(s, lay))
+    out = backfill(piv, features, feats_bc, stat_of)
     return out.orderBy("feature_id")
 
 

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 from ..core import geom as G
 from ..core.coverage import coverage_fraction
 from ..core.grid import Box, Grid
-from ..plans.stats import StatsPlan, quantile_name
+from ..plans.stats import ZERO_FILL, StatsPlan, quantile_name
 from ..sources.tiles import Raster
 
 EARTH_RADIUS = 6378137.0  # authalic, ref raster_area.h:63
@@ -110,50 +110,48 @@ def cell_areas(grid: Grid, rows: np.ndarray, spherical: bool) -> np.ndarray:
 # candidate join
 # ---------------------------------------------------------------------------
 
+def _tile_span(m, xmin: Column, ymin: Column, xmax: Column, ymax: Column,
+               eps: float = 0.0) -> "tuple[Column, Column]":
+    """(row sequence, col sequence) of the tiles of grid ``m`` that a box
+    spans, clamped to the grid. ``eps`` > 0 pulls both edges inward by that
+    fraction of a tile, so a box edge lying exactly on a tile boundary does
+    not claim the neighbouring tile."""
+    step_x = m.dx * m.tile_w
+    step_y = m.dy * m.tile_h
+
+    def index(offset: Column, step: float, n: int, nudge: float) -> Column:
+        q = offset / F.lit(step)
+        if nudge:
+            q = q + F.lit(nudge)
+        return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(q))).cast("int")
+
+    rows = F.sequence(
+        index(F.lit(m.ymax) - ymax, step_y, m.n_tile_rows, eps),
+        index(F.lit(m.ymax) - ymin, step_y, m.n_tile_rows, -eps),
+    )
+    cols = F.sequence(
+        index(xmin - F.lit(m.xmin), step_x, m.n_tile_cols, eps),
+        index(xmax - F.lit(m.xmin), step_x, m.n_tile_cols, -eps),
+    )
+    return rows, cols
+
+
 def feature_tile_cover(values: Raster, feats: DataFrame) -> DataFrame:
     """Explode each feature's bbox into covering tile keys (pure Catalyst
     sequence arithmetic — the 'H3 cover' of the north rule at tile
     granularity). Returns (tile_row, tile_col, feature_id, geom, f-bbox)."""
     m = values.meta
-    step_x = m.dx * m.tile_w
-    step_y = m.dy * m.tile_h
-
     f = feats.filter(
         (F.col("fxmin") <= F.lit(m.xmax))
         & (F.col("fxmax") >= F.lit(m.xmin))
         & (F.col("fymin") <= F.lit(m.ymax))
         & (F.col("fymax") >= F.lit(m.ymin))
     )
-    tr0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_rows - 1),
-            F.floor((F.lit(m.ymax) - F.col("fymax")) / F.lit(step_y)),
-        ),
-    ).cast("int")
-    tr1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_rows - 1),
-            F.floor((F.lit(m.ymax) - F.col("fymin")) / F.lit(step_y)),
-        ),
-    ).cast("int")
-    tc0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_cols - 1),
-            F.floor((F.col("fxmin") - F.lit(m.xmin)) / F.lit(step_x)),
-        ),
-    ).cast("int")
-    tc1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_cols - 1),
-            F.floor((F.col("fxmax") - F.lit(m.xmin)) / F.lit(step_x)),
-        ),
-    ).cast("int")
-    return f.withColumn("tile_row", F.explode(F.sequence(tr0, tr1))).withColumn(
-        "tile_col", F.explode(F.sequence(tc0, tc1))
+    rows, cols = _tile_span(
+        m, F.col("fxmin"), F.col("fymin"), F.col("fxmax"), F.col("fymax")
+    )
+    return f.withColumn("tile_row", F.explode(rows)).withColumn(
+        "tile_col", F.explode(cols)
     )
 
 
@@ -282,6 +280,20 @@ BROADCAST_FEATURE_LIMIT = 200_000
 _FUSED_COLLECT_MAX_BYTES = 256 << 20
 
 
+def collect_feature_broadcast(
+    feats: DataFrame, bounded: bool = True
+) -> "FeatureBroadcast | None":
+    """The driver-side feature set of the broadcast strategy, or None when
+    the table holds more than ``BROADCAST_FEATURE_LIMIT`` rows. Bounded, it
+    is ONE driver job — ``limit(N+1).collect()`` both counts and fetches,
+    so an oversized table never lands whole on the driver; ``bounded=False``
+    is for a table a count has already proved small."""
+    limit = BROADCAST_FEATURE_LIMIT
+    q = feats.select("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
+    rows = (q.limit(limit + 1) if bounded else q).collect()
+    return FeatureBroadcast(rows) if len(rows) <= limit else None
+
+
 def build_candidates(
     values: Raster,
     feats: DataFrame,
@@ -369,8 +381,7 @@ def build_candidates(
     # count-FIRST order so no geometry bytes ever land on the driver
     # before the refusal decision (a 10M-feature table of megabyte WKBs
     # must not stage limit+1 geometries just to discover the fallback).
-    sel_cols = ("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
-    rows = None
+    fb = None
     if n_feats is None:
         est = None
         try:
@@ -383,16 +394,13 @@ def build_candidates(
         except Exception:
             pass
         if est is not None and est <= _FUSED_COLLECT_MAX_BYTES:
-            rows = (
-                feats.select(*sel_cols)
-                .limit(BROADCAST_FEATURE_LIMIT + 1)
-                .collect()
-            )
-            n_feats = len(rows)
+            fb = collect_feature_broadcast(feats)
         else:
             # column-pruned bounded count: no geometry bytes move
             n_feats = feats.limit(BROADCAST_FEATURE_LIMIT + 1).count()
-    if n_feats > BROADCAST_FEATURE_LIMIT:
+    if n_feats is not None and n_feats <= BROADCAST_FEATURE_LIMIT:
+        fb = collect_feature_broadcast(feats, bounded=False)
+    if fb is None:
         return (
             candidate_pairs(
                 values, feats, broadcast_features=True,
@@ -400,9 +408,6 @@ def build_candidates(
             ),
             None,
         )
-    if rows is None:
-        rows = feats.select(*sel_cols).collect()
-    fb = FeatureBroadcast(rows)
     tile_side = values.raw_meta
     if tile_side is None:
         tile_side = values.tiles
@@ -465,6 +470,24 @@ def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
         & (F.col("fymin") < tile_ymax)
         & (F.col("fymax") > tile_ymin)
     )
+
+
+def weight_disagg(values_grid: Grid, weights_grid: Grid) -> "tuple[int, int]":
+    """Factor by which the value raster disaggregates onto a weight grid:
+    (1, 1) unless the weights are finer, when coverage runs on the finest
+    common grid (ref RasterView, raster.h:248-312). A weight grid without
+    integer-multiple resolutions and aligned origins is refused (ref
+    grid.h:219-282, checked at exact_extract.cpp:316-317) — sampling it
+    would silently read the wrong cells."""
+    vg, wg = values_grid, weights_grid
+    if not vg.compatible_with(wg):
+        raise ValueError(
+            "weights grid is not compatible with the value grid "
+            "(resolutions must be integer multiples, origins aligned)"
+        )
+    if wg.dx < vg.dx or wg.dy < vg.dy:
+        return (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
+    return (1, 1)
 
 
 # Broadcast the weight tile table only while its full pixel payload is
@@ -532,41 +555,14 @@ def _attach_weights(cand: DataFrame, values: Raster, weights: Raster) -> DataFra
             F.col("px").alias("px"),
         ).alias("wtile"),
     )
-    step_x = wm.dx * wm.tile_w
-    step_y = wm.dy * wm.tile_h
-    wr0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(wm.n_tile_rows - 1),
-            F.floor((F.lit(wm.ymax) - F.col("ymax")) / F.lit(step_y) + F.lit(1e-9)),
-        ),
-    ).cast("int")
-    wr1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(wm.n_tile_rows - 1),
-            F.floor((F.lit(wm.ymax) - F.col("ymin")) / F.lit(step_y) - F.lit(1e-9)),
-        ),
-    ).cast("int")
-    wc0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(wm.n_tile_cols - 1),
-            F.floor((F.col("xmin") - F.lit(wm.xmin)) / F.lit(step_x) + F.lit(1e-9)),
-        ),
-    ).cast("int")
-    wc1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(wm.n_tile_cols - 1),
-            F.floor((F.col("xmax") - F.lit(wm.xmin)) / F.lit(step_x) - F.lit(1e-9)),
-        ),
-    ).cast("int")
     slim = cand.select("tile_row", "tile_col", "xmin", "ymin", "xmax", "ymax").dropDuplicates(
         ["tile_row", "tile_col"]
     )
-    expanded = slim.withColumn("w_tr", F.explode(F.sequence(wr0, wr1))).withColumn(
-        "w_tc", F.explode(F.sequence(wc0, wc1))
+    rows, cols = _tile_span(
+        wm, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), eps=1e-9
+    )
+    expanded = slim.withColumn("w_tr", F.explode(rows)).withColumn(
+        "w_tc", F.explode(cols)
     )
     if _weight_payload_bytes(wm) <= WEIGHT_BROADCAST_MAX_BYTES:
         w = F.broadcast(w)
@@ -598,39 +594,12 @@ def static_weight_lists(values_meta, weights: Raster) -> DataFrame:
             F.col("px").alias("px"),
         ).alias("wtile"),
     )
-    m = values_meta
-    step_x = m.dx * m.tile_w
-    step_y = m.dy * m.tile_h
-    vr0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_rows - 1),
-            F.floor((F.lit(m.ymax) - F.col("ymax")) / F.lit(step_y) + F.lit(1e-9)),
-        ),
-    ).cast("int")
-    vr1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_rows - 1),
-            F.floor((F.lit(m.ymax) - F.col("ymin")) / F.lit(step_y) - F.lit(1e-9)),
-        ),
-    ).cast("int")
-    vc0 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_cols - 1),
-            F.floor((F.col("xmin") - F.lit(m.xmin)) / F.lit(step_x) + F.lit(1e-9)),
-        ),
-    ).cast("int")
-    vc1 = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m.n_tile_cols - 1),
-            F.floor((F.col("xmax") - F.lit(m.xmin)) / F.lit(step_x) - F.lit(1e-9)),
-        ),
-    ).cast("int")
-    expanded = wt.withColumn("tile_row", F.explode(F.sequence(vr0, vr1))).withColumn(
-        "tile_col", F.explode(F.sequence(vc0, vc1))
+    rows, cols = _tile_span(
+        values_meta, F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
+        eps=1e-9,
+    )
+    expanded = wt.withColumn("tile_row", F.explode(rows)).withColumn(
+        "tile_col", F.explode(cols)
     )
     return expanded.groupBy("tile_row", "tile_col").agg(
         F.collect_list("wtile").alias("wtiles")
@@ -987,25 +956,15 @@ def exact_extract(
         )
     disagg = (1, 1)
     if wraster is not None:
-        vg, wg = values.meta.grid, wraster.meta.grid
-        # grid compatibility: integer-multiple resolution + aligned origins
-        # (ref grid.h:219-282, checked at exact_extract.cpp:316-317)
-        if not vg.compatible_with(wg):
-            raise ValueError(
-                "weights grid is not compatible with the value grid "
-                "(resolutions must be integer multiples, origins aligned)"
-            )
-        if wg.dx < vg.dx or wg.dy < vg.dy:
-            # finer weights disaggregate the VALUE raster onto the finest
-            # common grid (ref RasterView, raster.h:248-312); count/sum are
-            # meaningless on disaggregated values (exact_extract.cpp:329-332)
-            disagg = (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
-            banned = {"count", "sum"} & set(stats)
-            if banned:
-                raise ValueError(
-                    f"stats {sorted(banned)} cannot be computed when the "
-                    "value raster is disaggregated to a finer weight grid"
-                )
+        disagg = weight_disagg(values.meta.grid, wraster.meta.grid)
+    # count/sum are meaningless on disaggregated values
+    # (exact_extract.cpp:329-332)
+    banned = {"count", "sum"} & set(stats)
+    if disagg != (1, 1) and banned:
+        raise ValueError(
+            f"stats {sorted(banned)} cannot be computed when the "
+            "value raster is disaggregated to a finer weight grid"
+        )
 
     cand, feats_bc = build_candidates(
         values, features, broadcast_features, salt_buckets=salt_buckets
@@ -1025,69 +984,18 @@ def exact_extract(
         default_weight=default_weight,
     )
 
-    result: DataFrame | None = None
-    fin = plan.finalize_columns()
-
     if plan.freq:
         # one kernel pass; everything (algebraic included) derives exactly
-        # from the merged value-frequency table. The freq table is consumed
-        # once per requested freq-stat piece (mode + minority + quantile +
-        # frac each reference it), so materialize it — it is tiny (features ×
-        # distinct values) and saves a full kernel re-scan per piece.
-        # localCheckpoint: blocks are released when the result is GC'd, no
-        # CacheManager entry leaked across repeated calls.
+        # from the merged value-frequency table
         partials = coverage_facts(cand, emit="freq", **kernel_kwargs)
-        freq_df = partials.groupBy("feature_id", "v").agg(
-            F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
-        ).localCheckpoint(eager=True)
-        if plan.algebraic:
-            agg_df = freq_df.groupBy("feature_id").agg(
-                *plan.algebraic_aggs_from_freq()
-            )
-            result = agg_df.select(
-                "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-            )
-        freq_result = _freq_stats(plan, freq_df)
-        result = (
-            freq_result
-            if result is None
-            else result.join(freq_result, on="feature_id", how="full")
-        )
-    elif plan.algebraic:
+        freq_df = merge_freq(partials).localCheckpoint(eager=True)
+        result = stats_from_freq(plan, freq_df)
+    else:
         # moments path: kernel emits ONE row per (feature, tile); the final
         # shuffle is independent of cell count (StatsRegistry merge)
         moments = coverage_facts(cand, emit="moments", **kernel_kwargs)
-        agg_df = moments.groupBy("feature_id").agg(
-            *plan.algebraic_aggs_from_moments()
-        )
-        result = agg_df.select(
-            "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-        )
-
-    # features with no facts: reference returns a row with 0/NA stats
-    # (test_exact_extract.R:433-485) — left join back to the feature list.
-    # In broadcast mode the ids are already on the driver: a LocalRelation
-    # avoids re-scanning the feature source (one fewer job per query).
-    if feats_bc is not None:
-        # pandas/Arrow => LocalTableScan (no python-RDD slices; see
-        # build_candidates for the measured per-plan cost of the list path)
-        base = features.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {"feature_id": pd.Series(feats_bc.value.ids, dtype="int64")}
-            )
-        )
-        # per-feature agg output is as small as the broadcast feature set:
-        # hint it so the backfill is a BroadcastHashJoin, not a sort-merge
-        result = base.join(F.broadcast(result), on="feature_id", how="left")
-    else:
-        base = features.select("feature_id")
-        result = base.join(result, on="feature_id", how="left")
-    fill = {}
-    for s in ("count", "sum", "weighted_count", "weighted_sum", "variety"):
-        if s in result.columns:
-            fill[s] = 0.0 if s != "variety" else 0
-    if fill:
-        result = result.fillna(fill)
+        result = stats_from_moments(plan, moments)
+    result = backfill(result, features, feats_bc)
     if append_cols is not None:
         result = result.join(append_cols, on="feature_id", how="left")
     return result.orderBy("feature_id") if sort else result
@@ -1119,17 +1027,7 @@ def exact_extract_pixels(
     cand, feats_bc = build_candidates(values, features, broadcast_features)
     disagg = (1, 1)
     if weights is not None:
-        wg, vg = weights.meta.grid, values.meta.grid
-        # same grid-compatibility contract as exact_extract (ref
-        # grid.h:219-282): a misaligned/non-integer-ratio weight grid must
-        # raise, not silently sample wrong cells
-        if not vg.compatible_with(wg):
-            raise ValueError(
-                "weights grid is not compatible with the value grid "
-                "(resolutions must be integer multiples, origins aligned)"
-            )
-        if wg.dx < vg.dx or wg.dy < vg.dy:
-            disagg = (int(round(vg.dx / wg.dx)), int(round(vg.dy / wg.dy)))
+        disagg = weight_disagg(values.meta.grid, weights.meta.grid)
         cand = _attach_weights(cand, values, weights)
     facts = coverage_facts(
         cand,
@@ -1176,6 +1074,101 @@ def exact_extract_apply(
     groupBy(feature_id).applyInPandas."""
     pixels = exact_extract_pixels(values, features, weights=weights, **pixel_kwargs)
     return pixels.groupBy("feature_id").applyInPandas(fn, schema)
+
+
+# ---------------------------------------------------------------------------
+# final aggregate: merged partials -> stat columns -> one row per feature
+# ---------------------------------------------------------------------------
+
+#: the additive moment columns of MOMENTS_SCHEMA
+_MOMENT_SUMS = [f.name for f in MOMENTS_SCHEMA.fields if f.name.startswith("_p_sum")]
+
+
+def merge_freq(partials: DataFrame, *keys: str) -> DataFrame:
+    """Merge per-(feature, tile) value frequencies (FREQ_SCHEMA) into one
+    (feature_id, *keys, v, sum_c, sum_cw) row per distinct value."""
+    return partials.groupBy("feature_id", *keys, "v").agg(
+        F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
+    )
+
+
+def merge_moments(moments: DataFrame) -> DataFrame:
+    """Merge partial moments per feature, keeping MOMENTS_SCHEMA — the
+    StatsRegistry merge (stats_registry.h:27-40) is closed over its own
+    schema, so merged partials (checkpoint buckets, streaming state) merge
+    again in ``stats_from_moments``."""
+    return moments.groupBy("feature_id").agg(
+        *[F.sum(c).alias(c) for c in _MOMENT_SUMS],
+        F.min("_p_min").alias("_p_min"),
+        F.max("_p_max").alias("_p_max"),
+    )
+
+
+def stats_from_moments(
+    plan: StatsPlan, moments_df: DataFrame, keys: "tuple[str, ...]" = ("feature_id",)
+) -> DataFrame:
+    """Algebraic stat columns per ``keys`` from partial moments."""
+    fin = plan.finalize_columns()
+    return moments_df.groupBy(*keys).agg(*plan.algebraic_aggs_from_moments()).select(
+        *keys, *[fin[s].alias(s) for s in plan.algebraic]
+    )
+
+
+def stats_from_freq(plan: StatsPlan, freq_df: DataFrame) -> DataFrame:
+    """Every requested stat from a merged value-frequency table — the
+    algebraic ones exactly too, because the frequency map partitions the
+    facts by value. Each freq stat piece (mode, quantile, frac, ...) reads
+    ``freq_df`` again, so when ``plan.freq`` is set the caller passes it
+    ``localCheckpoint``-ed (eager: the kernel runs once, and unlike a cache
+    entry the blocks are released when the result is GC'd)."""
+    result = None
+    if plan.algebraic:
+        fin = plan.finalize_columns()
+        result = freq_df.groupBy("feature_id").agg(
+            *plan.algebraic_aggs_from_freq()
+        ).select("feature_id", *[fin[s].alias(s) for s in plan.algebraic])
+    if plan.freq:
+        fr = _freq_stats(plan, freq_df)
+        result = fr if result is None else result.join(fr, on="feature_id", how="full")
+    return result
+
+
+def backfill(
+    result: DataFrame,
+    features: DataFrame,
+    feats_bc,
+    stat_of: "dict[str, str] | None" = None,
+) -> DataFrame:
+    """One row per feature: features with no covered cells get 0 for the
+    ``ZERO_FILL`` stats and NULL for the rest (ref test_exact_extract.R:
+    433-485). ``stat_of`` maps renamed result columns (a stack's
+    ``{stat}.{layer}``) back to their stat.
+
+    In broadcast mode the ids are already on the driver: a LocalRelation
+    (pandas/Arrow => LocalTableScan, see build_candidates) avoids
+    re-scanning the feature source, and the per-feature result is as small
+    as the broadcast feature set, so the hint makes the join a
+    BroadcastHashJoin. Cover-join mode left-joins the feature ids."""
+    if feats_bc is not None:
+        base = result.sparkSession.createDataFrame(
+            pd.DataFrame({"feature_id": pd.Series(feats_bc.value.ids, dtype="int64")})
+        )
+        out = base.join(F.broadcast(result), on="feature_id", how="left")
+    else:
+        out = features.select("feature_id").join(result, on="feature_id", how="left")
+    stat_of = stat_of or {}
+    cols = []
+    for f in out.schema.fields:
+        c = F.col(f"`{f.name}`")
+        fill = ZERO_FILL.get(stat_of.get(f.name, f.name))
+        if fill is not None:
+            # Spark's na.fill semantics (NaN counts as missing), spelled
+            # out because na.fill cannot address dotted column names
+            if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
+                c = F.nanvl(c, F.lit(None))
+            c = F.coalesce(c, F.lit(fill).cast(f.dataType)).alias(f.name)
+        cols.append(c)
+    return out.select(*cols)
 
 
 def _freq_stats(plan: StatsPlan, freq_df: DataFrame) -> DataFrame:

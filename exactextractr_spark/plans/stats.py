@@ -60,6 +60,16 @@ WEIGHTED_STATS = frozenset(
 
 ALL_STATS = ALGEBRAIC_STATS | FREQ_STATS
 
+#: what a feature with no covered cells reports for each additive stat; every
+#: other stat stays NULL (ref test_exact_extract.R:433-485)
+ZERO_FILL = {
+    "count": 0.0,
+    "sum": 0.0,
+    "weighted_count": 0.0,
+    "weighted_sum": 0.0,
+    "variety": 0,
+}
+
 
 def quantile_name(q: float) -> str:
     """Column name for a quantile — reference naming 'q{100q}'

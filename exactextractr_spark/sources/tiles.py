@@ -254,42 +254,6 @@ def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     return tiles.select(*cols).mapInPandas(_decode, DECODED_SCHEMA)
 
 
-def roundtrip_report(tiles: DataFrame) -> DataFrame:
-    """Per-tile decode verification: PSNR (inf when bit-exact) and
-    phash equality — the driver's decoded-pixel invariant."""
-
-    def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.png import psnr
-
-        for pdf in batches:
-            rows = []
-            for data, w, h, ph, cap in zip(
-                pdf["bytes"], pdf["w"], pdf["h"], pdf["phash"], pdf["caption"]
-            ):
-                px = decode_tile(bytes(data), int(w), int(h))
-                re_encoded = decode_tile(encode_tile(px), int(w), int(h))
-                rows.append(
-                    {
-                        "image_id": json.loads(cap).get("layer", "")
-                        + f"/{json.loads(cap)['tile_row']}/{json.loads(cap)['tile_col']}",
-                        "psnr_db": psnr(px, re_encoded),
-                        "phash_ok": phash64(px) == int(ph),
-                        "caption_ok": True,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("psnr_db", T.DoubleType()),
-            T.StructField("phash_ok", T.BooleanType()),
-            T.StructField("caption_ok", T.BooleanType()),
-        ]
-    )
-    return tiles.mapInPandas(_verify, schema)
-
-
 def raw_tiles_with_meta(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     """Attach grid metadata columns by parsing the caption JSON **in the
     JVM** (from_json) — no Python stage. Pixel payload stays encoded

@@ -4,11 +4,10 @@ continuously-updated per-feature stats.
 The reference is single-pass batch; this is the Spark-native extension for
 the 10^12-image table growing in place: ``readStream`` over the image-table
 directory → the SAME exact coverage kernel as batch (emit="moments", one
-row per feature×tile) → a stateful ``groupBy(feature_id)`` aggregation.
-The moments are pure sums plus min/max, so Spark's streaming state store
-merges each micro-batch in O(|features|) state with no re-scan of earlier
-tiles — the streaming answer after N tiles is bit-identical to the batch
-answer over those N tiles (test-asserted).
+row per feature×tile) → a stateful ``groupBy(feature_id)`` merge of the
+partial moments. The moments are pure sums plus min/max, so Spark's
+streaming state store merges each micro-batch in O(|features|) state with
+no re-scan of earlier tiles.
 
 Algebraic stats (count/sum/mean/min/max/variance/stdev/CV and weighted
 variants) stream as O(|features|) moment state. Frequency stats
@@ -17,9 +16,12 @@ variants) stream as O(|features|) moment state. Frequency stats
 bounded by |features| x |distinct values| — the CATEGORICAL-raster
 assumption the batch ``frac`` path already documents (a continuous-valued
 raster would grow state per distinct float; ``max_state_rows`` guards
-that loudly). Each trigger's snapshot runs the SAME ``_freq_stats``
-machinery as batch over the complete freq table, so the streaming answer
-after N tiles is bit-identical to the batch answer over those N tiles
+that loudly).
+
+Each trigger's snapshot (``foreachBatch`` over the complete merged state)
+runs the SAME finish as batch — ``stats_from_freq``/``stats_from_moments``
+then ``backfill`` — so the streaming answer after N tiles matches the
+batch answer over those N tiles, a row for every feature included
 (test-asserted for both stat families).
 
 Weighted stats stream too: the weight raster is STATIC, so its tiles are
@@ -55,18 +57,15 @@ def stream_zonal_stats(
 ):
     """Start the streaming zonal query; returns the StreamingQuery.
 
-    Without ``sink_dir`` results land in an in-memory table named
-    ``query_name`` (complete mode — read it with
-    ``spark.table(query_name)``). With ``sink_dir`` each trigger snapshots
-    the full current result to parquet via foreachBatch (overwrite), which
-    is the resumable-pipeline shape: the newest snapshot is always a
-    consistent answer over every tile ingested so far.
+    Each trigger snapshots the full current result. Without ``sink_dir``
+    the snapshot is a temp view named ``query_name`` (read it with
+    ``spark.table(query_name)``). With ``sink_dir`` it overwrites parquet
+    there, which is the resumable-pipeline shape: the newest snapshot is
+    always a consistent answer over every tile ingested so far.
     """
-    from ..operators.zonal import (
-        FeatureBroadcast,
-        coverage_facts,
-        static_weight_lists,
-    )
+    from pyspark.sql import functions as F
+
+    from ..operators import zonal
 
     if isinstance(stats, str):
         stats = [stats]
@@ -74,13 +73,7 @@ def stream_zonal_stats(
     if plan.needs_weights and weights is None:
         raise ValueError(f"stats {sorted(set(stats))} require weights")
     if weights is not None:
-        vg, wg = meta.grid, weights.meta.grid
-        if not vg.compatible_with(wg):
-            raise ValueError(
-                "weights grid is not compatible with the value grid "
-                "(resolutions must be integer multiples, origins aligned)"
-            )
-        if wg.dx < vg.dx or wg.dy < vg.dy:
+        if zonal.weight_disagg(meta.grid, weights.meta.grid) != (1, 1):
             raise ValueError(
                 "finer-than-value weight grids disaggregate the value "
                 "raster — batch-only; resample the weights first"
@@ -90,23 +83,15 @@ def stream_zonal_stats(
     # refuses loudly instead of landing an unbounded feature table on the
     # driver (the streaming path has no cover-join fallback — features must
     # broadcast)
-    from ..operators.zonal import BROADCAST_FEATURE_LIMIT
-
-    rows = (
-        features.select(
-            "feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax"
-        )
-        .limit(BROADCAST_FEATURE_LIMIT + 1)
-        .collect()
-    )
-    if len(rows) > BROADCAST_FEATURE_LIMIT:
+    fb = zonal.collect_feature_broadcast(features)
+    if fb is None:
         raise ValueError(
             f"streaming zonal requires a broadcastable feature table "
-            f"(> {BROADCAST_FEATURE_LIMIT} rows found); the streaming path "
-            "has no raster-sequential cover-join fallback — partition the "
+            f"(> {zonal.BROADCAST_FEATURE_LIMIT} rows found); the streaming "
+            "path has no raster-sequential cover-join fallback — partition the "
             "feature set or use the batch operator"
         )
-    feats_bc = spark.sparkContext.broadcast(FeatureBroadcast(rows))
+    feats_bc = spark.sparkContext.broadcast(fb)
 
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
@@ -115,49 +100,34 @@ def stream_zonal_stats(
     )
     tiles = raw_tiles_with_meta(raw, layer=meta.layer)
     if weights is not None:
-        from pyspark.sql import functions as F
-
-        from ..operators.zonal import (
-            WEIGHT_BROADCAST_MAX_BYTES,
-            _weight_payload_bytes,
-        )
-
-        wlists = static_weight_lists(meta, weights)
+        wlists = zonal.static_weight_lists(meta, weights)
         # size-gate the broadcast hint exactly like the batch path: a large
         # weight raster's pre-grouped lists join as a plain stream-static
         # equi-join (still stateless) instead of an OOM-prone broadcast
-        if _weight_payload_bytes(weights.meta) <= WEIGHT_BROADCAST_MAX_BYTES:
+        wbytes = zonal._weight_payload_bytes(weights.meta)
+        if wbytes <= zonal.WEIGHT_BROADCAST_MAX_BYTES:
             wlists = F.broadcast(wlists)
         tiles = tiles.join(wlists, on=["tile_row", "tile_col"], how="left")
-    fin = plan.finalize_columns()
+    kernel_kwargs = dict(
+        feats_bc=feats_bc, values_meta=meta, weighted=weights is not None
+    )
     if plan.freq:
-        # freq path: stateful groupBy(feature_id, v) in complete mode —
-        # state bounded by |features| x |distinct values| (categorical
-        # rasters; max_state_rows guards the continuous case loudly).
-        # Every trigger's snapshot derives ALL stats (algebraic included)
-        # from the complete freq table with the SAME machinery as batch,
-        # so parity is by construction.
-        from pyspark.sql import functions as F
+        # freq state: |features| x |distinct values| rows (categorical
+        # rasters; max_state_rows guards the continuous case loudly)
+        partials = zonal.coverage_facts(tiles, emit="freq", **kernel_kwargs)
+        state = zonal.merge_freq(partials)
+    else:
+        # moments state: one row per feature
+        moments = zonal.coverage_facts(tiles, emit="moments", **kernel_kwargs)
+        state = zonal.merge_moments(moments)
 
-        from ..operators.zonal import _freq_stats
-
-        partials = coverage_facts(
-            tiles, emit="freq", feats_bc=feats_bc, values_meta=meta,
-            weighted=weights is not None,
-        )
-        freq = partials.groupBy("feature_id", "v").agg(
-            F.sum("sum_c").alias("sum_c"), F.sum("sum_cw").alias("sum_cw")
-        )
-        feat_ids = [r["feature_id"] for r in rows]
-
-        def _freq_snapshot(batch_df: DataFrame, batch_id: int) -> None:
-            import pandas as pd
-
-            bspark = batch_df.sparkSession
-            fdf = batch_df.localCheckpoint(eager=True)
+    def _snapshot(batch_df: DataFrame, batch_id: int) -> None:
+        # batch_df is the complete merged state
+        if plan.freq:
+            merged = batch_df.localCheckpoint(eager=True)
             # limit-bounded guard job (the repo-wide pattern): we only need
             # "more than max_state_rows?", never the exact count
-            if fdf.limit(max_state_rows + 1).count() > max_state_rows:
+            if merged.limit(max_state_rows + 1).count() > max_state_rows:
                 raise ValueError(
                     "streaming freq state exceeds "
                     f"max_state_rows={max_state_rows} (feature, value) "
@@ -165,76 +135,24 @@ def stream_zonal_stats(
                     "stream frequency stats — run them in batch, or raise "
                     "max_state_rows"
                 )
-            result = None
-            if plan.algebraic:
-                agg_df = fdf.groupBy("feature_id").agg(
-                    *plan.algebraic_aggs_from_freq()
-                )
-                result = agg_df.select(
-                    "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-                )
-            fr = _freq_stats(plan, fdf)
-            result = (
-                fr if result is None
-                else result.join(fr, on="feature_id", how="full")
-            )
-            base = bspark.createDataFrame(
-                pd.DataFrame(
-                    {"feature_id": pd.Series(feat_ids, dtype="int64")}
-                )
-            )
-            result = base.join(
-                F.broadcast(result), on="feature_id", how="left"
-            )
-            fill = {
-                s: (0.0 if s != "variety" else 0)
-                for s in ("count", "sum", "weighted_count", "weighted_sum",
-                          "variety")
-                if s in result.columns
-            }
-            if fill:
-                result = result.fillna(fill)
-            result = result.orderBy("feature_id")
-            if sink_dir is not None:
-                result.write.mode("overwrite").parquet(sink_dir)
-            else:
-                # register the snapshot on the CALLER's session (row-based
-                # createDataFrame preserves nulls exactly; the view is
-                # per-feature tiny)
-                snap = spark.createDataFrame(
-                    result.collect(), schema=result.schema
-                )
-                snap.createOrReplaceTempView(query_name)
+            result = zonal.stats_from_freq(plan, merged)
+        else:
+            result = zonal.stats_from_moments(plan, batch_df)
+        result = zonal.backfill(result, features, feats_bc).orderBy("feature_id")
+        if sink_dir is not None:
+            result.write.mode("overwrite").parquet(sink_dir)
+        else:
+            # register the snapshot on the CALLER's session (row-based
+            # createDataFrame preserves nulls exactly; the view is
+            # per-feature tiny)
+            snap = spark.createDataFrame(result.collect(), schema=result.schema)
+            snap.createOrReplaceTempView(query_name)
 
-        writer = (
-            freq.writeStream.option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_freq_snapshot)
-            .outputMode("complete")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    moments = coverage_facts(
-        tiles, emit="moments", feats_bc=feats_bc, values_meta=meta,
-        weighted=weights is not None,
+    writer = (
+        state.writeStream.option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(_snapshot)
+        .outputMode("complete")
     )
-    agg = moments.groupBy("feature_id").agg(*plan.algebraic_aggs_from_moments())
-    out = agg.select(
-        "feature_id", *[fin[s].alias(s) for s in plan.algebraic]
-    )
-
-    writer = out.writeStream.option("checkpointLocation", checkpoint_dir)
-    if sink_dir is not None:
-
-        def _snapshot(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(sink_dir)
-
-        writer = writer.foreachBatch(_snapshot).outputMode("complete")
-    else:
-        writer = writer.format("memory").queryName(query_name).outputMode(
-            "complete"
-        )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

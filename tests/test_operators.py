@@ -290,8 +290,10 @@ def test_exact_extract_lines_stats(spark):
                       tile_w=3, tile_h=3)
     r = Raster.from_array(spark, arr, meta)
     # horizontal line through the middle row (y=1.5): cells 3,4,5 each 1.0
+    # feature 3 lies off the raster: it keeps a row with count/variety 0
     feats = features_from_wkt(spark, ["LINESTRING (0 1.5, 3 1.5)",
-                                      "LINESTRING (0.5 2.5, 1.5 2.5)"])
+                                      "LINESTRING (0.5 2.5, 1.5 2.5)",
+                                      "LINESTRING (10 10, 12 10)"])
     out = {row["feature_id"]: row.asDict() for row in
            exact_extract_lines(r, feats,
                                ["mean", "sum", "count", "min", "max",
@@ -306,6 +308,14 @@ def test_exact_extract_lines_stats(spark):
     assert out[2]["count"] == pytest.approx(1.0)
     assert out[2]["mean"] == pytest.approx(0.5)
     assert out[2]["mode"] == 1.0
+    assert out[3]["count"] == 0.0 and out[3]["variety"] == 0
+    assert out[3]["mean"] is None and out[3]["mode"] is None
+    # the freq table is checkpointed before the algebraic stats read it, so
+    # the line kernel runs once: no MapInPandas left in the executed plan
+    mixed = exact_extract_lines(r, feats, ["mean", "mode"])
+    mixed.collect()
+    plan = mixed._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
     # weighted stats refused
     with pytest.raises(ValueError, match="weighted"):
         exact_extract_lines(r, feats, ["weighted_mean"])

@@ -642,10 +642,13 @@ def test_streaming_zonal_matches_batch(spark, tmp_path):
     tr = F.get_json_object("caption", "$.tile_row").cast("int")
     tiles.filter(tr < 2).coalesce(1).write.mode("append").parquet(src)
     tiles.filter(tr >= 2).coalesce(1).write.mode("append").parquet(src)
+    # feature 3 is disjoint from the raster: no tile ever reaches it, yet
+    # it must come back with count 0 and NULL mean, as in batch
     feats = features_from_wkt(
         spark,
         ["POLYGON ((0.5 0.5, 8.5 0.5, 8.5 8.5, 0.5 8.5, 0.5 0.5))",
-         "POLYGON ((6 6, 11 6, 11 11, 6 11, 6 6))"],
+         "POLYGON ((6 6, 11 6, 11 11, 6 11, 6 6))",
+         "POLYGON ((20 20, 21 20, 21 21, 20 21, 20 20))"],
     )
     stats = ["count", "sum", "mean", "min", "max", "stdev"]
     q = stream_zonal_stats(
@@ -659,7 +662,9 @@ def test_streaming_zonal_matches_batch(spark, tmp_path):
     want = {r["feature_id"]: r.asDict()
             for r in exact_extract(Raster.from_tiles(tiles, meta), feats,
                                    stats).collect()}
-    assert set(got) == set(want)
+    assert set(got) == set(want) == {1, 2, 3}
+    assert got[3]["count"] == 0.0 and got[3]["sum"] == 0.0
+    assert got[3]["mean"] is None and want[3]["mean"] is None
     for fid in want:
         for s in stats:
             assert got[fid][s] == pytest.approx(want[fid][s], rel=1e-12), (fid, s)
