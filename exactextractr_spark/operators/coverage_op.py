@@ -13,7 +13,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tiles import Raster
-from .zonal import backfill, build_candidates, coverage_facts, stats_from_freq
+from .zonal import (
+    backfill,
+    build_candidates,
+    candidate_loop,
+    coverage_facts,
+    stats_from_freq,
+)
 
 
 def coverage_fraction_df(
@@ -29,8 +35,6 @@ def coverage_fraction_df(
         cand,
         feats_bc=feats_bc,
         values_meta=values.meta,
-        include_cell=True,
-        include_xy=include_xy,
         keep_nodata=True,  # coverage does not look at values at all
     )
     cols = ["feature_id", "cell", "cov"] + (["cx", "cy"] if include_xy else [])
@@ -61,9 +65,9 @@ def _line_lengths(cand: DataFrame, feats_bc, meta) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..core import geom as G
     from ..core.coverage import cell_lengths
     from ..core.grid import Grid
+    from ..sources.tiles import tile_pixels
 
     schema = T.StructType(
         [
@@ -80,59 +84,19 @@ def _line_lengths(cand: DataFrame, feats_bc, meta) -> DataFrame:
     raster_xmax = meta.xmin + meta.width * meta.dx
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math as _math
-
-        from ..core.png import decode_tile as _decode
-
-        fb = feats_bc.value if feats_bc is not None else None
-        geom_cache: dict[bytes, object] = {}
+        # candidate tests must be CLOSED for lines: a horizontal/vertical
+        # line has a degenerate bbox that can lie exactly on a tile edge;
+        # the kernel's closed/open edge ownership then ensures each
+        # boundary segment is counted exactly once
+        candidates = candidate_loop(feats_bc, closed=True)
         for pdf in batches:
             outs = []
-            raw_mode = "px" not in pdf.columns
             for row in pdf.itertuples(index=False):
-                if raw_mode:
-                    px = _decode(bytes(row.bytes), int(row.ncols), int(row.nrows))
-                else:
-                    px = np.asarray(row.px, dtype=np.float64).reshape(
-                        int(row.nrows), int(row.ncols)
-                    )
-                # nodata sentinel -> NaN, same contract as the zonal kernel:
                 # a line traversing a nodata cell reports v=NaN, not the raw
                 # sentinel value
-                nodata = getattr(row, "nodata", None)
-                if nodata is not None and not (
-                    isinstance(nodata, float) and _math.isnan(nodata)
-                ):
-                    px = np.where(px == nodata, np.nan, px)
+                px = tile_pixels(row)
                 tg = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
-                # candidate tests must be INCLUSIVE for lines: a horizontal/
-                # vertical line has a degenerate bbox that can lie exactly on
-                # a tile edge; the kernel's closed/open edge ownership then
-                # ensures each boundary segment is counted exactly once
-                if fb is not None:
-                    items = [
-                        (int(fb.ids[j]), fb.geom(j))
-                        for j in fb.overlapping_inclusive(
-                            row.xmin, row.ymin, row.xmax, row.ymax
-                        )
-                    ]
-                else:
-                    items = []
-                    for ft in row.feats:
-                        # exact bbox refine (cover join is tile-granular)
-                        if (
-                            ft["fxmin"] > row.xmax
-                            or ft["fxmax"] < row.xmin
-                            or ft["fymin"] > row.ymax
-                            or ft["fymax"] < row.ymin
-                        ):
-                            continue
-                        gwkb = bytes(ft["geom"])
-                        g = geom_cache.get(gwkb)
-                        if g is None:
-                            g = geom_cache[gwkb] = G.from_wkb(gwkb)
-                        items.append((ft["feature_id"], g))
-                for fid, geom in items:
+                for fid, geom, _ in candidates(row):
                     # half-cell tolerance: the tile edge is computed JVM-side
                     # from caption JSON ((ymax - r0*dy) - h*dy) and the raster
                     # edge driver-side (ymax - height*dy); a 1-ULP divergence
@@ -256,7 +220,7 @@ def coverage_fraction_raster(
                 "would emit a dense (feature x tile) product; use "
                 "crop=True (sparse) or restrict the feature set"
             )
-        all_keys = values.raw_meta if values.raw_meta is not None else values.tiles
+        all_keys = values.kernel_tiles
         import pyspark.sql.functions as F
 
         feats_l = features.select(

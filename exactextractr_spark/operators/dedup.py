@@ -465,7 +465,8 @@ def ngram_jaccard_pairs(
     the cap (classic exact Jaccard).
 
     Plan shape (capped path): the hashed (id, gram) table is built once and
-    persisted; a codegen ``groupBy(gram).count`` (map-side partial, never a
+    checkpointed (``localCheckpoint``, released with the result, never
+    left in the session's cache); a codegen ``groupBy(gram).count`` (map-side partial, never a
     list build over hot keys) finds the rare grams, which join back to keep
     only the df-capped rows — typically a tiny fraction of the corpus.
     Candidate pairs are then generated JVM-side from each rare gram's
@@ -497,7 +498,7 @@ def ngram_jaccard_pairs(
             docs.withColumn("_toks", toks)
             .select(F.col(id_col).alias("id"), F.explode(gram_strs).alias("gram"))
         )
-        grams = grams.persist()
+        grams = grams.localCheckpoint(eager=True)
         sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
         inter = (
             grams.alias("a")
@@ -533,7 +534,7 @@ def ngram_jaccard_pairs(
         )
     )
     # built once, consumed by the df count and the rare-gram join
-    grams = grams.persist()
+    grams = grams.localCheckpoint(eager=True)
     rare = (
         grams.groupBy("g")
         .agg(F.count("*").alias("_df"))
@@ -545,7 +546,7 @@ def ngram_jaccard_pairs(
         kept.groupBy("g")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .select("ids")
-    ).persist()
+    ).localCheckpoint(eager=True)
     sizes = (
         bygram.select(F.explode("ids").alias("id"))
         .groupBy("id")

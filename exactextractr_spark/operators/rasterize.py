@@ -24,8 +24,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..sources.tiles import DECODED_SCHEMA, Raster, RasterMeta
 from .zonal import build_candidates, coverage_facts
@@ -56,10 +54,11 @@ def blank_raster(spark: SparkSession, meta: RasterMeta) -> Raster:
                         "dy": meta.dy,
                         "nrows": g.nrows,
                         "ncols": g.ncols,
-                        # value-less target: the kernel runs coverage_only,
-                        # so no pixel payload is materialized or shipped
-                        # (a 256² float64 zero block per tile is ~0.5 MB of
-                        # pure Arrow waste otherwise)
+                        # value-less target: the kernel reads an empty block
+                        # as coverage-only (tile_pixels returns None), so no
+                        # pixel payload is materialized or shipped (a 256²
+                        # float64 zero block per tile is ~0.5 MB of pure
+                        # Arrow waste otherwise)
                         "px": np.zeros(0),
                     }
                 )
@@ -82,8 +81,7 @@ def rasterize_polygons(
     target = blank_raster(spark, meta)
     cand, feats_bc = build_candidates(target, features)
     facts = coverage_facts(
-        cand, feats_bc=feats_bc, values_meta=meta, include_cell=True,
-        keep_nodata=True, coverage_only=True,
+        cand, feats_bc=feats_bc, values_meta=meta, keep_nodata=True
     ).select("feature_id", "cell", "cov")
     # Argmax + total-coverage gate in ONE hash aggregate (no sort windows).
     # Struct comparison is lexicographic: highest cov wins; on a cov tie the

@@ -47,9 +47,10 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
     candidate table, bit-identical output). Semantics match the replaced
     JVM ``_dot / (_norm * _norm)`` expression on EVERY path: a zero norm
     product is NULL (Spark's non-ANSI x / 0.0), NaN inputs propagate NaN,
-    and null/ragged vector rows (which poison the JVM fold) are NULL —
-    the per-row fallback runs only for batches containing such rows, so
-    the result never depends on batch composition. Returns
+    and null/ragged vector rows and vectors holding a null element (which
+    poison the JVM fold) are NULL — the per-row fallback runs only for
+    batches containing such rows, so the result never depends on batch
+    composition. Returns
     ``df[keep] + cos_sim``."""
     import pyarrow as pa
 
@@ -67,7 +68,13 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
             ia = b.schema.get_field_index(vec_a)
             ib = b.schema.get_field_index(vec_b)
             ca, cb = b.column(ia), b.column(ib)
-            flat_ok = ca.null_count == 0 and cb.null_count == 0
+            fa, fb = ca.flatten(), cb.flatten()
+            flat_ok = (
+                ca.null_count == 0
+                and cb.null_count == 0
+                and fa.null_count == 0
+                and fb.null_count == 0
+            )
             if flat_ok:
                 la = ca.value_lengths().to_numpy(zero_copy_only=False)
                 lb = cb.value_lengths().to_numpy(zero_copy_only=False)
@@ -78,8 +85,8 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
                     and la[0] > 0
                 )
             if flat_ok:
-                A = np.asarray(ca.flatten(), dtype=np.float64).reshape(n, -1)
-                B = np.asarray(cb.flatten(), dtype=np.float64).reshape(n, -1)
+                A = np.asarray(fa, dtype=np.float64).reshape(n, -1)
+                B = np.asarray(fb, dtype=np.float64).reshape(n, -1)
                 dot = np.zeros(n)
                 na = np.zeros(n)
                 nb = np.zeros(n)
@@ -98,7 +105,11 @@ def _with_cos(df: DataFrame, vec_a: str, vec_b: str, keep: "list[str]"):
             else:
                 rows = [
                     None
-                    if x is None or y is None or len(x) != len(y)
+                    if x is None
+                    or y is None
+                    or len(x) != len(y)
+                    or None in x
+                    or None in y
                     else _scalar_cos_fold(x, y)
                     for x, y in zip(ca.to_pylist(), cb.to_pylist())
                 ]

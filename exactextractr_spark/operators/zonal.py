@@ -37,7 +37,7 @@ from ..core import geom as G
 from ..core.coverage import coverage_fraction
 from ..core.grid import Box, Grid
 from ..plans.stats import ZERO_FILL, StatsPlan, quantile_name
-from ..sources.tiles import Raster
+from ..sources.tiles import Raster, tile_pixels
 
 EARTH_RADIUS = 6378137.0  # authalic, ref raster_area.h:63
 _PI180 = math.pi / 180.0
@@ -197,10 +197,7 @@ def candidate_pairs(
         per_tile = per_tile.drop("_salt")
     if broadcast_features:
         per_tile = F.broadcast(per_tile)
-    tile_side = values.raw_meta
-    if tile_side is None:
-        tile_side = values.tiles
-    return tile_side.join(per_tile, on=["tile_row", "tile_col"], how="inner")
+    return values.kernel_tiles.join(per_tile, on=["tile_row", "tile_col"], how="inner")
 
 
 class FeatureBroadcast:
@@ -238,24 +235,14 @@ class FeatureBroadcast:
             self.fymax[i] = r["fymax"]
             self.wkbs.append(bytes(r["geom"]))
 
-    def overlapping(self, xmin, ymin, xmax, ymax) -> np.ndarray:
-        """Indices of features whose bbox intersects the given tile box."""
+    def overlapping(self, xmin, ymin, xmax, ymax, closed: bool) -> np.ndarray:
+        """Indices of features whose bbox meets the given tile box (see
+        ``_bbox_meets``)."""
         return np.nonzero(
-            (self.fxmin < xmax)
-            & (self.fxmax > xmin)
-            & (self.fymin < ymax)
-            & (self.fymax > ymin)
-        )[0]
-
-    def overlapping_inclusive(self, xmin, ymin, xmax, ymax) -> np.ndarray:
-        """Closed-interval variant for LINEAR features, whose degenerate
-        bboxes can lie exactly on a tile edge (the line kernel's edge
-        ownership de-duplicates boundary segments)."""
-        return np.nonzero(
-            (self.fxmin <= xmax)
-            & (self.fxmax >= xmin)
-            & (self.fymin <= ymax)
-            & (self.fymax >= ymin)
+            _bbox_meets(
+                self.fxmin, self.fymin, self.fxmax, self.fymax,
+                xmin, ymin, xmax, ymax, closed,
+            )
         )[0]
 
     def geom(self, i: int):
@@ -268,6 +255,50 @@ class FeatureBroadcast:
         if g[i] is None:
             g[i] = G.from_wkb(self.wkbs[i])
         return g[i]
+
+
+def _bbox_meets(fxmin, fymin, fxmax, fymax, xmin, ymin, xmax, ymax, closed: bool):
+    """Feature bbox vs tile box, on scalars or arrays: open intervals, or
+    closed ones for LINEAR features, whose degenerate bboxes can lie exactly
+    on a tile edge (the line kernel's edge ownership de-duplicates boundary
+    segments)."""
+    if closed:
+        return (fxmin <= xmax) & (fxmax >= xmin) & (fymin <= ymax) & (fymax >= ymin)
+    return (fxmin < xmax) & (fxmax > xmin) & (fymin < ymax) & (fymax > ymin)
+
+
+def candidate_loop(feats_bc, closed: bool = False):
+    """The candidate loop every per-tile kernel shares (the reference runs
+    one loop behind both processors, raster_sequential_processor.cpp:38-121
+    and feature_sequential_processor.cpp:24-91). Build it inside the
+    kernel; the returned ``candidates(row)`` yields ``(feature_id, geom,
+    (fxmin, fymin, fxmax, fymax))`` for every feature whose bbox meets the
+    row's tile, from the broadcast ``feats_bc`` (vectorized bbox test) or
+    the row's cover-join ``feats`` list (refined exactly: cover cells are
+    floor-rounded). ``closed`` picks the bbox intervals (``_bbox_meets``)."""
+    fb = feats_bc.value if feats_bc is not None else None
+    geom_cache: dict[bytes, object] = {}
+
+    def candidates(row):
+        if fb is not None:
+            for j in fb.overlapping(row.xmin, row.ymin, row.xmax, row.ymax, closed):
+                bbox = (fb.fxmin[j], fb.fymin[j], fb.fxmax[j], fb.fymax[j])
+                yield int(fb.ids[j]), fb.geom(j), bbox
+            return
+        for ft in row.feats:
+            bbox = (ft["fxmin"], ft["fymin"], ft["fxmax"], ft["fymax"])
+            if not _bbox_meets(*bbox, row.xmin, row.ymin, row.xmax, row.ymax, closed):
+                continue
+            wkb = bytes(ft["geom"])
+            geom = geom_cache.get(wkb)
+            if geom is None:
+                geom = G.from_wkb(wkb)
+                if len(geom_cache) > 4096:
+                    geom_cache.clear()
+                geom_cache[wkb] = geom
+            yield ft["feature_id"], geom, bbox
+
+    return candidates
 
 
 #: features above this count fall back to the cover-join strategy
@@ -408,9 +439,7 @@ def build_candidates(
             ),
             None,
         )
-    tile_side = values.raw_meta
-    if tile_side is None:
-        tile_side = values.tiles
+    tile_side = values.kernel_tiles
     # driver-side tile pruning from feature bboxes (the reference's crop,
     # exact_extract.cpp:359-361): skip the filter when features blanket the
     # raster — scanning everything beats building a huge IN-set
@@ -614,13 +643,9 @@ def coverage_facts(
     cand: DataFrame,
     *,
     values_meta,
-    weighted: bool = False,
     area_weights: bool = False,
     spherical: bool = False,
     coverage_area: bool = False,
-    include_cell: bool = False,
-    include_xy: bool = False,
-    include_area: bool = False,
     keep_nodata: bool = False,
     default_value: float | None = None,
     default_weight: float | None = None,
@@ -628,7 +653,6 @@ def coverage_facts(
     feats_bc=None,
     disagg: "tuple[int, int]" = (1, 1),
     by_layer: bool = False,
-    coverage_only: bool = False,
 ) -> DataFrame:
     """Run the exact coverage kernel per (feature, tile) row.
 
@@ -640,95 +664,34 @@ def coverage_facts(
     StatsRegistry accumulation, stats_registry.h:25-84, done before the
     shuffle instead of after it):
 
-    - ``"pixels"``: sparse facts (feature_id, v, w, cov[, cell, cx, cy,
-      area]) — the coverage-fraction raster in long form, for the pixel/UDF
+    - ``"pixels"``: sparse facts (feature_id, v, w, cov, cell, cx, cy,
+      area) — the coverage-fraction raster in long form, for the pixel/UDF
       path.
     - ``"freq"``: per-(feature, tile, value) partial sums (v, Σc, Σcw) —
       combine for the groupBy(fid, v) frequency-stat shuffle.
     - ``"moments"``: ONE row per (feature, tile) of algebraic moments —
       shuffle volume independent of cell count; the 100-TB path for all
       algebraic stats.
+
+    Tiles of a value-less raster (``tile_pixels`` returns None) read as 0.
     """
     raster_xmin = values_meta.xmin
     raster_ymax = values_meta.ymax
     raster_width = values_meta.width
-    need_cell = include_cell
-    need_xy = include_xy
-    need_area = include_area or coverage_area or area_weights or spherical
+    need_area = coverage_area or area_weights or emit == "pixels"
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math as _math
-
-        from ..core.png import decode_tile as _decode
-
-        fb = feats_bc.value if feats_bc is not None else None
+        candidates = candidate_loop(feats_bc)
         fx, fy = disagg
-        geom_cache: dict[bytes, object] = {}
-
-        def _iter_feats(row):
-            """Yield (feature_id, geom, fxmin, fymin, fxmax, fymax) for
-            candidates of this tile, from the broadcast (vectorized bbox
-            test) or the per-tile list (cover-join mode)."""
-            if fb is not None:
-                for j in fb.overlapping(row.xmin, row.ymin, row.xmax, row.ymax):
-                    yield (
-                        int(fb.ids[j]),
-                        fb.geom(j),
-                        fb.fxmin[j],
-                        fb.fymin[j],
-                        fb.fxmax[j],
-                        fb.fymax[j],
-                    )
-                return
-            for ft in row.feats:
-                # exact bbox refine (cover cells are floor-rounded)
-                if (
-                    ft["fxmin"] >= row.xmax
-                    or ft["fxmax"] <= row.xmin
-                    or ft["fymin"] >= row.ymax
-                    or ft["fymax"] <= row.ymin
-                ):
-                    continue
-                gwkb = bytes(ft["geom"])
-                geom = geom_cache.get(gwkb)
-                if geom is None:
-                    geom = G.from_wkb(gwkb)
-                    if len(geom_cache) > 4096:
-                        geom_cache.clear()
-                    geom_cache[gwkb] = geom
-                yield (
-                    ft["feature_id"],
-                    geom,
-                    ft["fxmin"],
-                    ft["fymin"],
-                    ft["fxmax"],
-                    ft["fymax"],
-                )
-
         for pdf in batches:
             outs = []
             has_w = "wtiles" in pdf.columns
-            raw_mode = "px" not in pdf.columns
             for row in pdf.itertuples(index=False):
                 # decode this tile's pixels ONCE for all its features
-                if coverage_only:
-                    # geometry-only queries (coverage_fraction, rasterize):
-                    # no pixel payload ships or decodes, values read as 0
-                    px = None
-                elif raw_mode:
-                    px = _decode(bytes(row.bytes), int(row.ncols), int(row.nrows))
-                    nodata = row.nodata
-                    if nodata is not None and not (
-                        isinstance(nodata, float) and _math.isnan(nodata)
-                    ):
-                        px = np.where(px == nodata, np.nan, px)
-                else:
-                    px = np.asarray(row.px, dtype=np.float64).reshape(
-                        int(row.nrows), int(row.ncols)
-                    )
+                px = tile_pixels(row)
                 tile_grid = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
-                for feature_id, geom, fxmin, fymin, fxmax, fymax in _iter_feats(row):
-                    sub = tile_grid.crop(Box(fxmin, fymin, fxmax, fymax))
+                for feature_id, geom, bbox in candidates(row):
+                    sub = tile_grid.crop(Box(*bbox))
                     if sub.size == 0:
                         continue
                     if fx > 1 or fy > 1:
@@ -765,44 +728,32 @@ def coverage_facts(
                     # cell centers in world coords, at sampling resolution
                     cx = samp.xmin + (cc + 0.5) * samp.dx
                     cy = samp.ymax - (rr + 0.5) * samp.dy
-                    rec: dict[str, np.ndarray] = {
-                        "feature_id": np.full(n, feature_id, dtype=np.int64),
-                        "v": v,
-                        "cov": covv,
-                    }
-                    if need_area:
-                        area = cell_areas(samp, rr, spherical)
-                    else:
-                        area = None
-                    if coverage_area and area is not None:
+                    area = cell_areas(samp, rr, spherical) if need_area else None
+                    if coverage_area:
                         covv = covv * area
-                        rec["cov"] = covv
-                    if has_w or area_weights:
-                        if area_weights and area is not None:
-                            w = area.copy()
-                        elif has_w:
-                            w = np.full(n, np.nan)
-                            wtiles = row.wtiles if row.wtiles is not None else []
-                            for wt in wtiles:
-                                wpx = np.asarray(wt["px"], dtype=np.float64).reshape(
-                                    int(wt["nrows"]), int(wt["ncols"])
-                                )
-                                wr = np.floor((wt["ymax"] - cy) / wt["dy"]).astype(np.int64)
-                                wc = np.floor((cx - wt["xmin"]) / wt["dx"]).astype(np.int64)
-                                sel = (
-                                    (wr >= 0)
-                                    & (wr < int(wt["nrows"]))
-                                    & (wc >= 0)
-                                    & (wc < int(wt["ncols"]))
-                                )
-                                if sel.any():
-                                    w[sel] = wpx[wr[sel], wc[sel]]
-                            if default_weight is not None:
-                                w = np.where(np.isnan(w), default_weight, w)
-                        rec["w"] = w
+                    if area_weights:
+                        w = area
+                    elif has_w:
+                        w = np.full(n, np.nan)
+                        wtiles = row.wtiles if row.wtiles is not None else []
+                        for wt in wtiles:
+                            wpx = np.asarray(wt["px"], dtype=np.float64).reshape(
+                                int(wt["nrows"]), int(wt["ncols"])
+                            )
+                            wr = np.floor((wt["ymax"] - cy) / wt["dy"]).astype(np.int64)
+                            wc = np.floor((cx - wt["xmin"]) / wt["dx"]).astype(np.int64)
+                            sel = (
+                                (wr >= 0)
+                                & (wr < int(wt["nrows"]))
+                                & (wc >= 0)
+                                & (wc < int(wt["ncols"]))
+                            )
+                            if sel.any():
+                                w[sel] = wpx[wr[sel], wc[sel]]
+                        if default_weight is not None:
+                            w = np.where(np.isnan(w), default_weight, w)
                     else:
                         w = np.full(n, np.nan)
-                        rec["w"] = w
                     if emit == "moments":
                         # one scalar row per pair, accumulated as plain
                         # python lists — a pandas frame per pair costs more
@@ -846,19 +797,14 @@ def coverage_facts(
                             ) + rec_f[1:]
                         outs.append(rec_f)
                         continue
-                    if need_cell:
-                        # 1-based global cell index of the value raster, row-major
-                        # 1-based cell index of the VALUE raster even when
-                        # disaggregated (ref raster_utils.cpp:53-118)
-                        grow = int(round((raster_ymax - tile_grid.ymax) / tile_grid.dy)) + tr
-                        gcol = int(round((tile_grid.xmin - raster_xmin) / tile_grid.dx)) + tc
-                        rec["cell"] = (grow * raster_width + gcol + 1).astype(np.int64)
-                    else:
-                        rec["cell"] = np.zeros(n, dtype=np.int64)
-                    rec["cx"] = cx if need_xy else np.zeros(n)
-                    rec["cy"] = cy if need_xy else np.zeros(n)
-                    rec["area"] = area if area is not None else np.zeros(n)
-                    outs.append(tuple(rec[c] for c in _out_cols))
+                    # 1-based row-major cell index of the VALUE raster, even
+                    # when disaggregated (ref raster_utils.cpp:53-118)
+                    grow = int(round((raster_ymax - tile_grid.ymax) / tile_grid.dy)) + tr
+                    gcol = int(round((tile_grid.xmin - raster_xmin) / tile_grid.dx)) + tc
+                    cell = (grow * raster_width + gcol + 1).astype(np.int64)
+                    outs.append(
+                        (np.full(n, feature_id, dtype=np.int64), v, w, covv, cell, cx, cy, area)
+                    )
             if outs:
                 # ONE frame per Arrow batch (np.concatenate of column
                 # arrays), not a pandas concat of per-pair frames
@@ -976,7 +922,6 @@ def exact_extract(
         feats_bc=feats_bc,
         disagg=disagg,
         values_meta=values.meta,
-        weighted=wraster is not None or area_weights,
         area_weights=area_weights,
         spherical=spherical,
         coverage_area=coverage_area,
@@ -1034,9 +979,6 @@ def exact_extract_pixels(
         feats_bc=feats_bc,
         disagg=disagg,
         values_meta=values.meta,
-        include_cell=include_cell,
-        include_xy=include_xy,
-        include_area=include_area,
         coverage_area=coverage_area,
         spherical=spherical,
         default_value=default_value,

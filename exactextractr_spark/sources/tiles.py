@@ -208,6 +208,29 @@ def tile_table_from_array(
     return spark.createDataFrame(pdf, TILE_SCHEMA)
 
 
+def _nodata_as_nan(px: np.ndarray, nodata: "float | None") -> np.ndarray:
+    """The one nodata rule: cells equal to the sentinel read as NaN (a NaN
+    or absent sentinel leaves the block as it is)."""
+    if nodata is None or math.isnan(nodata):
+        return px
+    return np.where(px == nodata, np.nan, px)
+
+
+def tile_pixels(row) -> "np.ndarray | None":
+    """The pixel block of one kernel tile row (``Raster.kernel_tiles``):
+    decoded ``px`` is reshaped; encoded ``bytes`` is decoded with the
+    nodata sentinel read as NaN; a value-less block (empty ``px``, as
+    ``rasterize.blank_raster`` emits) is None."""
+    px = getattr(row, "px", None)
+    if px is None:
+        return _nodata_as_nan(
+            decode_tile(bytes(row.bytes), int(row.ncols), int(row.nrows)), row.nodata
+        )
+    if len(px) == 0:
+        return None
+    return np.asarray(px, dtype=np.float64).reshape(int(row.nrows), int(row.ncols))
+
+
 def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     """Image table -> decoded tile blocks (Arrow-batched ``mapInPandas``).
 
@@ -229,12 +252,9 @@ def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
                 meta = json.loads(cap)
                 if layer is not None and meta["layer"] != layer:
                     continue
-                px = decode_tile(bytes(data), int(w), int(h))
-                nodata = meta.get("nodata")
-                if nodata is not None and not (
-                    isinstance(nodata, float) and math.isnan(nodata)
-                ):
-                    px = np.where(px == nodata, np.nan, px)
+                px = _nodata_as_nan(
+                    decode_tile(bytes(data), int(w), int(h)), meta.get("nodata")
+                )
                 out["layer"].append(meta["layer"])
                 out["tile_row"].append(meta["tile_row"])
                 out["tile_col"].append(meta["tile_col"])
@@ -257,9 +277,9 @@ def decode_tiles(tiles: DataFrame, layer: str | None = None) -> DataFrame:
 def raw_tiles_with_meta(tiles: DataFrame, layer: str | None = None) -> DataFrame:
     """Attach grid metadata columns by parsing the caption JSON **in the
     JVM** (from_json) — no Python stage. Pixel payload stays encoded
-    (``bytes``); the coverage kernel decodes lazily with a per-worker cache,
-    so a tile joined against many features is shipped compressed and decoded
-    at most once per worker."""
+    (``bytes``); a kernel decodes it with ``tile_pixels``, so a tile joined
+    against many features is shipped compressed and decoded once per tile
+    row."""
     m = F.from_json("caption", CAPTION_SCHEMA).alias("_m")
     df = tiles.select("bytes", "w", "h", m)
     df = df.select(
@@ -315,6 +335,15 @@ class Raster:
         if self._decoded is None:
             self._decoded = decode_tiles(self._raw, layer=self.meta.layer)
         return self._decoded
+
+    @property
+    def kernel_tiles(self) -> DataFrame:
+        """The tile frame a per-tile kernel reads (each row through
+        ``tile_pixels``): raw tiles with JVM-parsed metadata, decoded in the
+        kernel, or the decoded blocks this raster was built from."""
+        if self._raw is None:
+            return self._decoded
+        return raw_tiles_with_meta(self._raw, layer=self.meta.layer)
 
     @property
     def raw_meta(self) -> DataFrame | None:

@@ -108,9 +108,7 @@ def stream_zonal_stats(
         if wbytes <= zonal.WEIGHT_BROADCAST_MAX_BYTES:
             wlists = F.broadcast(wlists)
         tiles = tiles.join(wlists, on=["tile_row", "tile_col"], how="left")
-    kernel_kwargs = dict(
-        feats_bc=feats_bc, values_meta=meta, weighted=weights is not None
-    )
+    kernel_kwargs = dict(feats_bc=feats_bc, values_meta=meta)
     if plan.freq:
         # freq state: |features| x |distinct values| rows (categorical
         # rasters; max_state_rows guards the continuous case loudly)

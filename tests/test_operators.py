@@ -511,3 +511,44 @@ def test_transform_geometry_restamps_srid():
     # srid-less input stays srid-less
     g2 = from_wkt("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
     assert transform_geometry(g2, "EPSG:4326", "EPSG:3857").srid is None
+
+
+def test_raw_and_decoded_payloads_agree(spark):
+    """One nodata rule for both tile payload forms: the encoded tile table
+    and the same raster as decoded blocks give identical zonal, line and
+    resample results, with the sentinel cell read as NaN (NULL once it
+    leaves the kernel) in both."""
+    from exactextractr_spark.operators.coverage_op import line_cell_lengths_df
+    from exactextractr_spark.operators.zonal import exact_extract
+
+    arr = np.arange(1.0, 37.0).reshape(6, 6)
+    arr[2, 3] = -9999.0  # cell 16, inside polygon 2 and on both lines
+    meta = RasterMeta("v", xmin=0, ymax=6, dx=1, dy=1, width=6, height=6,
+                      tile_w=3, tile_h=3, nodata=-9999.0)
+    raw = Raster.from_array(spark, arr, meta)
+    dec = Raster(raw.tiles, meta, decoded=True)
+    polys = features_from_wkt(spark, [
+        SQ_WKT, "POLYGON ((1.5 1.5, 4.5 1.5, 4.5 4.5, 1.5 4.5, 1.5 1.5))",
+    ])
+    lines = features_from_wkt(spark, [
+        "LINESTRING (0 3.5, 6 3.5)", "LINESTRING (3.5 0, 3.5 6)",
+    ])
+    dst = RasterMeta("d", xmin=0, ymax=6, dx=1.5, dy=1.5, width=4, height=4,
+                     tile_w=4, tile_h=4)
+
+    def run(r):
+        moments = exact_extract(
+            r, polys, ["count", "sum", "mean", "min", "max", "variance"]
+        ).collect()
+        freq = exact_extract(r, polys, ["mode", "median", "variety", "frac"]).collect()
+        lens = line_cell_lengths_df(r, lines).collect()
+        resampled = exact_resample(r, dst, "mean").collect()
+        return moments, [
+            sorted(map(repr, rows)) for rows in (moments, freq, lens, resampled)
+        ]
+
+    moments, got = run(raw)
+    assert got == run(dec)[1]
+    # the sentinel never reads as a value
+    assert all(row["min"] > 0 for row in moments)
+    assert any("v=None" in row and "cell=16" in row for row in got[2])

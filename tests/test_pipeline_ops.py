@@ -91,6 +91,8 @@ def test_ngram_jaccard_max_df_cap(spark):
     uncapped = {(r["id_a"], r["id_b"]): r["jaccard"]
                 for r in ngram_jaccard_pairs(docs, n=2, threshold=0.3).collect()}
     assert uncapped[(1, 2)] == pytest.approx(4 / 6)
+    # neither path leaves a cached relation behind in the session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_minhash_simhash_edge_docs(spark):
@@ -1139,6 +1141,7 @@ def test_with_cos_null_zero_norm_semantics(spark):
         (3, None, [1.0, 0.0]),         # NULL vec -> NULL
         (4, [1.0], [1.0, 0.0]),        # ragged -> NULL
         (5, [3.0, 4.0], [4.0, 3.0]),   # cos 24/25
+        (6, [1.0, None], [1.0, 0.0]),  # null element -> NULL
     ]
     df = spark.createDataFrame(
         rows, "id long, a array<double>, b array<double>"
@@ -1150,10 +1153,13 @@ def test_with_cos_null_zero_norm_semantics(spark):
     assert got[3] is None
     assert got[4] is None
     assert got[5] == 24.0 / 25.0
-    # flat path (no null/ragged rows in the batch): zero norm still NULL
+    assert got[6] is None
+    # no null/ragged rows in the batch: zero norm still NULL, and a null
+    # element still NULL
     df2 = spark.createDataFrame(
-        [rows[0], rows[1], rows[4]], "id long, a array<double>, b array<double>"
+        [rows[0], rows[1], rows[4], rows[5]],
+        "id long, a array<double>, b array<double>",
     ).coalesce(1)
     got2 = {r["id"]: r["cos_sim"]
             for r in _with_cos(df2, "a", "b", ["id"]).collect()}
-    assert got2 == {1: 1.0, 2: None, 5: 24.0 / 25.0}
+    assert got2 == {1: 1.0, 2: None, 5: 24.0 / 25.0, 6: None}
