@@ -79,6 +79,7 @@ class ZonalCheckpointer:
         """Compute algebraic zonal stats with per-bucket checkpointing.
         Re-invoking after a crash resumes from the manifest."""
         plan = StatsPlan(stats)
+        plan.check_weights(None)
         if plan.freq:
             raise ValueError("checkpointed path supports algebraic stats only")
         man = self.load_manifest()

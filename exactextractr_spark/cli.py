@@ -103,6 +103,19 @@ def main(argv=None):
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
+    if args.weight_tiles and args.weight_layer:
+        # the weight-layer branch would silently overwrite the GeoTIFF
+        # weights read from --weight-tiles; refuse the ambiguity instead
+        raise SystemExit(
+            "--weight-tiles and --weight-layer are mutually exclusive; "
+            "pass exactly one weight source"
+        )
+    if args.checkpoint_dir and (args.weight_tiles or args.weight_layer):
+        raise SystemExit("--checkpoint-dir cannot be combined with weights "
+                         "(the checkpointed path is unweighted)")
+    if args.linear and args.checkpoint_dir:
+        raise SystemExit("--linear cannot be combined with --checkpoint-dir "
+                         "(the checkpointed path is areal-only)")
 
     from .checkpoint import ZonalCheckpointer
     from .operators.zonal import exact_extract
@@ -119,13 +132,6 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
-    if args.weight_tiles and args.weight_layer:
-        # the weight-layer branch would silently overwrite the GeoTIFF
-        # weights read from --weight-tiles; refuse the ambiguity instead
-        raise SystemExit(
-            "--weight-tiles and --weight-layer are mutually exclusive; "
-            "pass exactly one weight source"
-        )
     is_tif = args.tiles.lower().endswith((".tif", ".tiff"))
     if is_tif:
         from .sources.geotiff import read_geotiff
@@ -197,9 +203,6 @@ def main(argv=None):
                 spark.read.parquet(args.polys), args.id, args.geom
             )
 
-    if args.linear and args.checkpoint_dir:
-        raise SystemExit("--linear cannot be combined with --checkpoint-dir "
-                         "(the checkpointed path is areal-only)")
     if args.checkpoint_dir:
         ck = ZonalCheckpointer(args.checkpoint_dir)
         out = ck.run(values, feats, stats)

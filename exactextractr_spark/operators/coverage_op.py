@@ -194,10 +194,10 @@ def coverage_fraction_raster(
     from ..core.coverage import coverage_fraction
     from ..core.grid import Grid
 
-    from .zonal import candidate_pairs, feature_tile_cover
+    from .zonal import cover_candidates, feature_side
 
     if crop:
-        cand = candidate_pairs(values, features)
+        cand = cover_candidates(values, features)
         # the dense kernel is geometry-only: drop pixel payloads BEFORE the
         # python stage (mapInPandas ships every input column — Catalyst
         # cannot prune through it)
@@ -206,6 +206,7 @@ def coverage_fraction_raster(
             "dx", "dy", "nrows", "ncols", "feats",
         )
     else:
+        features, _ = feature_side(features, values.meta, broadcast=False)
         # cross every feature with every tile (0-filled outside). Output is
         # inherently |features| x |tiles| — quadratic by DEFINITION of
         # crop=FALSE, so refuse feature sets where that product is a mistake

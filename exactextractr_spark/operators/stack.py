@@ -112,16 +112,20 @@ def _stack_single_pass(
     scan: one ``emit="freq"`` pass tagged by layer, aggregated once and
     checkpointed (features × layers × distinct values — tiny), then each
     layer's slice routes through the same ``stats_from_freq`` the per-layer
-    loop uses, so results match the fallback. Returns None
-    when preconditions don't hold (weights, heterogenous sources/grids,
-    non-default strategy kwargs) and the caller falls back to the loop."""
+    loop uses, so results match the fallback. Features and tiles go
+    through the same feature step (CRS reconciliation, broadcast collect)
+    and tile pruning as ``exact_extract``. Returns None when preconditions
+    don't hold (weights, heterogenous sources/grids/CRS, non-default
+    strategy kwargs, a feature table too large to broadcast) and the
+    caller falls back to the loop."""
     from ..plans.stats import StatsPlan
     from ..sources.tiles import raw_tiles_with_meta
     from .zonal import (
         backfill,
-        collect_feature_broadcast,
         coverage_facts,
+        feature_side,
         merge_freq,
+        prune_tiles,
         stats_from_freq,
         stats_from_moments,
     )
@@ -140,7 +144,9 @@ def _stack_single_pass(
     # identical-grid gate: resolution, origin AND extent (width/height) must
     # match, compared with the same relative tolerance Grid.compatible_with
     # uses — exact float equality would reject harmless rounding, and
-    # ignoring extent would let different-sized layers share one pass
+    # ignoring extent would let different-sized layers share one pass.
+    # Tiling and CRS must match too: one tile-key set prunes every layer,
+    # and one CRS reconciles the features for all of them
     g0 = v0.meta.grid
     for r in values[1:]:
         g = r.meta.grid
@@ -152,6 +158,8 @@ def _stack_single_pass(
             or abs(g.ymax - g0.ymax) > tol_y
             or abs(g.xmax - g0.xmax) > tol_x
             or abs(g.ymin - g0.ymin) > tol_y
+            or r.meta.crs != v0.meta.crs
+            or (r.meta.tile_w, r.meta.tile_h) != (v0.meta.tile_w, v0.meta.tile_h)
         ):
             return None
     plan = StatsPlan(stats, quantiles)
@@ -172,10 +180,10 @@ def _stack_single_pass(
             DataFrame.unionByName,
             [raw_tiles_with_meta(r._raw, layer=r.meta.layer) for r in values],
         )
-    fb = collect_feature_broadcast(features)
+    _, fb = feature_side(features, v0.meta)
     if fb is None:
         return None
-    feats_bc = features.sparkSession.sparkContext.broadcast(fb)
+    tiles, feats_bc = prune_tiles(tiles, v0.meta, fb)
     # final column name -> stat, for the renames and the zero-fill
     stat_of: dict[str, str] = {}
 

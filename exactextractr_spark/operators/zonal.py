@@ -310,49 +310,74 @@ BROADCAST_FEATURE_LIMIT = 200_000
 #: before the fallback decision
 _FUSED_COLLECT_MAX_BYTES = 256 << 20
 
+#: the estimate must fit this many times under _FUSED_COLLECT_MAX_BYTES: it
+#: sizes the scan (compressed geometry for a parquet source), and the rows a
+#: collect materializes can be several times larger
+_FUSED_COLLECT_MARGIN = 4
 
-def collect_feature_broadcast(
-    feats: DataFrame, bounded: bool = True
-) -> "FeatureBroadcast | None":
-    """The driver-side feature set of the broadcast strategy, or None when
-    the table holds more than ``BROADCAST_FEATURE_LIMIT`` rows. Bounded, it
-    is ONE driver job — ``limit(N+1).collect()`` both counts and fetches,
-    so an oversized table never lands whole on the driver; ``bounded=False``
-    is for a table a count has already proved small."""
+
+def _reconcile_crs(feats: DataFrame, raster_crs: str, cset: "set[str]") -> DataFrame:
+    """Features in the raster CRS, given the set of their rows' CRS ("" for
+    a row with no CRS). The reference auto-transforms the polygons with a
+    warning (R/exact_extract.R:360-377); we do the same for the closed-form
+    pairs of core/crs.py, and every other mismatch fails loudly instead of
+    producing silently wrong answers on misaligned coordinates."""
+    fcrs = sorted(cset - {""})
+    bad = [c for c in fcrs if c != raster_crs]
+    if not bad:
+        return feats
+    from ..core.crs import can_transform
+    from ..sources.features import transform_features
+
+    if "" in cset:
+        # mixed null-CRS and defined-CRS rows: transform_features
+        # reprojects EVERY row, which would silently move the null-CRS
+        # geometries (assumed already in the raster CRS)
+        raise ValueError(
+            "feature table mixes rows with no CRS and rows in "
+            f"{bad[0]!r}; cannot auto-transform without silently "
+            "reprojecting the CRS-less rows — stamp or transform "
+            "them explicitly first"
+        )
+    if len(fcrs) == 1 and can_transform(bad[0], raster_crs):
+        import warnings
+
+        warnings.warn(
+            f"transforming features from {bad[0]!r} to the raster "
+            f"CRS {raster_crs!r} (ref R/exact_extract.R:360-377)"
+        )
+        return transform_features(feats, bad[0], raster_crs)
+    raise ValueError(
+        f"feature CRS {bad[0]!r} does not match the raster CRS "
+        f"{raster_crs!r} and no closed-form transform "
+        "exists; transform the features to the raster CRS first "
+        "(the reference transforms automatically via PROJ, "
+        "R/exact_extract.R:360-377)"
+    )
+
+
+def feature_side(
+    features: DataFrame, meta, broadcast: bool = True
+) -> "tuple[DataFrame, FeatureBroadcast | None]":
+    """The feature step every zonal entry point runs before touching tiles:
+    ``(features in the raster CRS of meta, FeatureBroadcast | None)``.
+
+    The CRS audit sees every row's ``crs`` (any single mismatched row
+    invalidates the run) in ONE metadata job, agg(count, collect_set(crs)),
+    whose count doubles as the broadcast-size guard. With ``broadcast`` the
+    driver-side feature set of the broadcast strategy is collected, or None
+    returned when the table holds more than ``BROADCAST_FEATURE_LIMIT`` rows
+    (the caller falls back to the cover join, or refuses). Without a count
+    from the audit, a table whose optimizer size estimate is comfortably
+    collectable takes ONE bounded job (limit+1 rows, count derived from the
+    result); a large or unestimable table counts FIRST so no geometry bytes
+    land on the driver before the refusal decision (a 10M-feature table of
+    megabyte WKBs must not stage limit+1 geometries to discover the
+    fallback)."""
     limit = BROADCAST_FEATURE_LIMIT
-    q = feats.select("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
-    rows = (q.limit(limit + 1) if bounded else q).collect()
-    return FeatureBroadcast(rows) if len(rows) <= limit else None
-
-
-def build_candidates(
-    values: Raster,
-    feats: DataFrame,
-    broadcast_features: bool = True,
-    salt_buckets: int = 1,
-):
-    """Choose the candidate strategy (the reference's --strategy flag,
-    exactextract.cpp:95-101):
-
-    - feature-sequential / broadcast (small feature table): returns
-      ``(tiles_df, sc.broadcast(FeatureBroadcast))`` — single-stage plan.
-    - raster-sequential / cover join (huge feature table): returns
-      ``(joined_df_with_feats_lists, None)``.
-    """
-    # CRS reconciliation: the reference auto-transforms the polygons to the
-    # raster CRS with a warning (R/exact_extract.R:360-377). We do the same
-    # for the closed-form pair (EPSG:4326 <-> EPSG:3857, core/crs.py); every
-    # other mismatched pair fails loudly instead of producing silently wrong
-    # answers on misaligned coordinates.
-    # ONE metadata job covers both the CRS audit and the broadcast-size
-    # guard: agg(count, collect_set(crs)) — the CRS audit must see every
-    # row's crs anyway (any single mismatched row invalidates the run), so
-    # folding count() into the same aggregate is free, and every zonal query
-    # now issues at most one auxiliary driver job before the kernel stage.
     n_feats: int | None = None
-    check_crs = "crs" in feats.columns and bool(values.meta.crs)
-    if check_crs:
-        meta_row = feats.agg(
+    if "crs" in features.columns and meta.crs:
+        meta_row = features.agg(
             F.count(F.lit(1)).alias("n"),
             # coalesce to "" so a null-crs row is visible in the set — rows
             # with no CRS are conventionally assumed to already be in the
@@ -360,90 +385,38 @@ def build_candidates(
             F.collect_set(F.coalesce(F.col("crs"), F.lit(""))).alias("cset"),
         ).first()
         n_feats = meta_row["n"]
-        cset = set(meta_row["cset"])
-        has_null = "" in cset
-        fcrs = sorted(cset - {""})
-        bad = [c for c in fcrs if c != values.meta.crs]
-        if bad:
-            from ..core.crs import can_transform
-            from ..sources.features import transform_features
-
-            if has_null:
-                # mixed null-CRS and defined-CRS rows: transform_features
-                # reprojects EVERY row, which would silently move the
-                # null-CRS geometries (assumed already in the raster CRS)
-                raise ValueError(
-                    "feature table mixes rows with no CRS and rows in "
-                    f"{bad[0]!r}; cannot auto-transform without silently "
-                    "reprojecting the CRS-less rows — stamp or transform "
-                    "them explicitly first"
-                )
-            if len(set(bad)) == 1 and len(fcrs) == 1 and can_transform(
-                bad[0], values.meta.crs
-            ):
-                import warnings
-
-                warnings.warn(
-                    f"transforming features from {bad[0]!r} to the raster "
-                    f"CRS {values.meta.crs!r} (ref R/exact_extract.R:360-377)"
-                )
-                feats = transform_features(feats, bad[0], values.meta.crs)
-            else:
-                raise ValueError(
-                    f"feature CRS {bad[0]!r} does not match the raster CRS "
-                    f"{values.meta.crs!r} and no closed-form transform "
-                    "exists; transform the features to the raster CRS first "
-                    "(the reference transforms automatically via PROJ, "
-                    "R/exact_extract.R:360-377)"
-                )
-    if not broadcast_features:
-        return (
-            candidate_pairs(
-                values, feats, broadcast_features=False, salt_buckets=salt_buckets
-            ),
-            None,
-        )
-    # Broadcast-size guard fused with the broadcast collect: when the CRS
-    # audit already counted the table, reuse that count and only collect
-    # under the limit. Otherwise, a table whose optimizer size estimate is
-    # comfortably collectable takes ONE bounded job (limit+1 rows, count
-    # derived from the result — saves an auxiliary driver job on every
-    # small-feature query); a large or unestimable table keeps the old
-    # count-FIRST order so no geometry bytes ever land on the driver
-    # before the refusal decision (a 10M-feature table of megabyte WKBs
-    # must not stage limit+1 geometries just to discover the fallback).
-    fb = None
+        features = _reconcile_crs(features, meta.crs, set(meta_row["cset"]))
+    if not broadcast:
+        return features, None
+    q = features.select("feature_id", "geom", "fxmin", "fymin", "fxmax", "fymax")
     if n_feats is None:
         est = None
         try:
             est = int(
                 str(
-                    feats._jdf.queryExecution().optimizedPlan().stats()
+                    features._jdf.queryExecution().optimizedPlan().stats()
                     .sizeInBytes()
                 )
             )
         except Exception:
             pass
-        if est is not None and est <= _FUSED_COLLECT_MAX_BYTES:
-            fb = collect_feature_broadcast(feats)
-        else:
-            # column-pruned bounded count: no geometry bytes move
-            n_feats = feats.limit(BROADCAST_FEATURE_LIMIT + 1).count()
-    if n_feats is not None and n_feats <= BROADCAST_FEATURE_LIMIT:
-        fb = collect_feature_broadcast(feats, bounded=False)
-    if fb is None:
-        return (
-            candidate_pairs(
-                values, feats, broadcast_features=True,
-                salt_buckets=salt_buckets,
-            ),
-            None,
-        )
-    tile_side = values.kernel_tiles
-    # driver-side tile pruning from feature bboxes (the reference's crop,
-    # exact_extract.cpp:359-361): skip the filter when features blanket the
-    # raster — scanning everything beats building a huge IN-set
-    m = values.meta
+        if est is not None and est * _FUSED_COLLECT_MARGIN <= _FUSED_COLLECT_MAX_BYTES:
+            rows = q.limit(limit + 1).collect()
+            return features, FeatureBroadcast(rows) if len(rows) <= limit else None
+        # column-pruned bounded count: no geometry bytes move
+        n_feats = features.limit(limit + 1).count()
+    if n_feats > limit:
+        return features, None
+    return features, FeatureBroadcast(q.collect())
+
+
+def prune_tiles(tiles: DataFrame, meta, fb: FeatureBroadcast):
+    """The tile step of the broadcast strategy: ``(tiles, sc.broadcast(fb))``
+    with ``tiles`` (any frame with tile_row/tile_col on the grid of
+    ``meta``) cut to the tiles some feature bbox spans — the reference's
+    crop, exact_extract.cpp:359-361. The filter is skipped when features
+    blanket the raster: scanning everything beats building a huge IN-set."""
+    m = meta
     step_x = m.dx * m.tile_w
     step_y = m.dy * m.tile_h
     keys: set[tuple[int, int]] = set()
@@ -462,8 +435,8 @@ def build_candidates(
         for tr in range(tr0, tr1 + 1):
             for tc in range(tc0, tc1 + 1):
                 keys.add((tr, tc))
+    spark = tiles.sparkSession
     if not blanket and len(keys) < m.n_tile_rows * m.n_tile_cols:
-        spark = tile_side.sparkSession
         # pandas/Arrow path => a true LocalTableScan: a python-list
         # createDataFrame becomes a 32-slice python RDD whose first
         # materialization costs one python-worker round-trip PER SLICE
@@ -477,11 +450,43 @@ def build_candidates(
                 }
             )
         )
-        tile_side = tile_side.join(
+        tiles = tiles.join(
             F.broadcast(keys_df), on=["tile_row", "tile_col"], how="inner"
         )
-    sc = tile_side.sparkSession.sparkContext
-    return tile_side, sc.broadcast(fb)
+    return tiles, spark.sparkContext.broadcast(fb)
+
+
+def build_candidates(
+    values: Raster,
+    feats: DataFrame,
+    broadcast_features: bool = True,
+    salt_buckets: int = 1,
+):
+    """Choose the candidate strategy (the reference's --strategy flag,
+    exactextract.cpp:95-101):
+
+    - feature-sequential / broadcast (small feature table): returns
+      ``(tiles_df, sc.broadcast(FeatureBroadcast))`` — single-stage plan.
+    - raster-sequential / cover join (huge feature table): returns
+      ``(joined_df_with_feats_lists, None)``.
+    """
+    feats, fb = feature_side(feats, values.meta, broadcast_features)
+    if fb is None:
+        return (
+            candidate_pairs(
+                values, feats, broadcast_features=broadcast_features,
+                salt_buckets=salt_buckets,
+            ),
+            None,
+        )
+    return prune_tiles(values.kernel_tiles, values.meta, fb)
+
+
+def cover_candidates(values: Raster, features: DataFrame) -> DataFrame:
+    """Feature step + cover join for a kernel that reads every feature of
+    a tile's cover list unrefined (the dense coverage raster)."""
+    feats, _ = feature_side(features, values.meta, broadcast=False)
+    return candidate_pairs(values, feats)
 
 
 def candidate_pairs_flat(values: Raster, feats: DataFrame) -> DataFrame:
@@ -888,18 +893,9 @@ def exact_extract(
     if isinstance(stats, str):
         stats = [stats]
     plan = StatsPlan(stats, quantiles or [])
-
+    plan.check_weights(weights)
     area_weights = weights == "area"
     wraster = weights if isinstance(weights, Raster) else None
-    if plan.needs_weights and weights is None:
-        raise ValueError(f"stats {sorted(set(stats))} require weights")
-    if weights is not None and not plan.needs_weights:
-        import warnings
-
-        warnings.warn(
-            "weights provided but no requested stat uses them "
-            "(ref test_exact_extract_errors.R:28-36)"
-        )
     disagg = (1, 1)
     if wraster is not None:
         disagg = weight_disagg(values.meta.grid, wraster.meta.grid)
@@ -1087,7 +1083,7 @@ def backfill(
     ``{stat}.{layer}``) back to their stat.
 
     In broadcast mode the ids are already on the driver: a LocalRelation
-    (pandas/Arrow => LocalTableScan, see build_candidates) avoids
+    (pandas/Arrow => LocalTableScan, see prune_tiles) avoids
     re-scanning the feature source, and the per-feature result is as small
     as the broadcast feature set, so the hint makes the join a
     BroadcastHashJoin. Cover-join mode left-joins the feature ids."""

@@ -16,6 +16,7 @@ free and map-side combine keeps mega-polygon skew off the wire.
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
@@ -71,6 +72,21 @@ ZERO_FILL = {
 }
 
 
+#: raw moment (summed over c = coverage, x = value, w = weight) -> the
+#: algebraic stats whose ``finalize_columns`` expression reads it
+_MOMENT_USERS = {
+    "_sum_c": {"count", "mean", "variance", "stdev", "coefficient_of_variation"},
+    "_sum_xc": {"sum", "mean", "weighted_fraction", "variance", "stdev",
+                "coefficient_of_variation"},
+    "_sum_xxc": {"variance", "stdev", "coefficient_of_variation"},
+    "_sum_cw": {"weighted_count", "weighted_mean", "weighted_variance",
+                "weighted_stdev"},
+    "_sum_xcw": {"weighted_sum", "weighted_mean", "weighted_fraction",
+                 "weighted_variance", "weighted_stdev"},
+    "_sum_xxcw": {"weighted_variance", "weighted_stdev"},
+}
+
+
 def quantile_name(q: float) -> str:
     """Column name for a quantile — reference naming 'q{100q}'
     (R/exact_extract_helpers.R:46-50)."""
@@ -101,37 +117,6 @@ class StatsPlan:
     @property
     def freq(self) -> list[str]:
         return [s for s in self.stats if s in FREQ_STATS]
-
-    # ------------------------------------------------------------------
-    def algebraic_aggs(self) -> list[Column]:
-        """Aggregate columns over facts (fid, v, w, cov). Raw moments are
-        aliased with a leading underscore and combined in finalize()."""
-        c = F.col("cov")
-        v = F.col("v")
-        w = F.col("w")
-        aggs: dict[str, Column] = {}
-
-        need = set(self.algebraic)
-        if need & {"count", "mean", "variance", "stdev", "coefficient_of_variation"}:
-            aggs["_sum_c"] = F.sum(c)
-        if need & {"sum", "mean", "weighted_fraction", "variance", "stdev",
-                   "coefficient_of_variation"}:
-            aggs["_sum_xc"] = F.sum(v * c)
-        if need & {"variance", "stdev", "coefficient_of_variation"}:
-            aggs["_sum_xxc"] = F.sum(v * v * c)
-        if need & {"weighted_count", "weighted_mean", "weighted_variance",
-                   "weighted_stdev"}:
-            aggs["_sum_cw"] = F.sum(c * w)
-        if need & {"weighted_sum", "weighted_mean", "weighted_fraction",
-                   "weighted_variance", "weighted_stdev"}:
-            aggs["_sum_xcw"] = F.sum(v * c * w)
-        if need & {"weighted_variance", "weighted_stdev"}:
-            aggs["_sum_xxcw"] = F.sum(v * v * c * w)
-        if "min" in need:
-            aggs["min"] = F.min(v)
-        if "max" in need:
-            aggs["max"] = F.max(v)
-        return [expr.alias(name) for name, expr in aggs.items()]
 
     def finalize_columns(self) -> dict[str, Column]:
         """Map final stat name -> expression over the raw-moment columns."""
@@ -174,33 +159,44 @@ class StatsPlan:
                 out[s] = wvar if s == "weighted_variance" else F.sqrt(wvar)
         return out
 
+    def check_weights(self, weights) -> None:
+        """Refuse weighted stats without weights, and warn about weights
+        that no requested stat reads (ref test_exact_extract_errors.R:
+        28-36)."""
+        if self.needs_weights and weights is None:
+            raise ValueError(f"stats {sorted(set(self.stats))} require weights")
+        if weights is not None and not self.needs_weights:
+            warnings.warn(
+                "weights provided but no requested stat uses them "
+                "(ref test_exact_extract_errors.R:28-36)"
+            )
+
+    def _moment_aggs(
+        self, sums: "dict[str, Column]", lo: Column, hi: Column
+    ) -> list[Column]:
+        """The raw moments ``finalize_columns`` reads for the requested
+        stats: ``sums`` maps each moment to the column its partials sum;
+        ``min``/``max`` reduce ``lo``/``hi``."""
+        need = set(self.algebraic)
+        aggs = [
+            F.sum(sums[m]).alias(m)
+            for m, users in _MOMENT_USERS.items()
+            if need & users
+        ]
+        if "min" in need:
+            aggs.append(F.min(lo).alias("min"))
+        if "max" in need:
+            aggs.append(F.max(hi).alias("max"))
+        return aggs
+
     def algebraic_aggs_from_moments(self) -> list[Column]:
         """Merge per-(feature, tile) partial moments (MOMENTS_SCHEMA) —
         the StatsRegistry merge (stats_registry.h:27-40) as plain sums."""
-        aggs: list[Column] = []
-        need = set(self.algebraic)
-        pairs = [
-            ("_sum_c", "_p_sum_c", {"count", "mean", "variance", "stdev",
-                                    "coefficient_of_variation"}),
-            ("_sum_xc", "_p_sum_xc", {"sum", "mean", "weighted_fraction",
-                                      "variance", "stdev", "coefficient_of_variation"}),
-            ("_sum_xxc", "_p_sum_xxc", {"variance", "stdev",
-                                        "coefficient_of_variation"}),
-            ("_sum_cw", "_p_sum_cw", {"weighted_count", "weighted_mean",
-                                      "weighted_variance", "weighted_stdev"}),
-            ("_sum_xcw", "_p_sum_xcw", {"weighted_sum", "weighted_mean",
-                                        "weighted_fraction", "weighted_variance",
-                                        "weighted_stdev"}),
-            ("_sum_xxcw", "_p_sum_xxcw", {"weighted_variance", "weighted_stdev"}),
-        ]
-        for out, src, users in pairs:
-            if need & users:
-                aggs.append(F.sum(src).alias(out))
-        if "min" in need:
-            aggs.append(F.min("_p_min").alias("min"))
-        if "max" in need:
-            aggs.append(F.max("_p_max").alias("max"))
-        return aggs
+        return self._moment_aggs(
+            {m: F.col("_p" + m) for m in _MOMENT_USERS},
+            F.col("_p_min"),
+            F.col("_p_max"),
+        )
 
     def algebraic_aggs_from_freq(self) -> list[Column]:
         """Derive the same raw moments from the merged value-frequency table
@@ -209,39 +205,12 @@ class StatsPlan:
         v = F.col("v")
         c = F.col("sum_c")
         cw = F.col("sum_cw")
-        aggs: dict[str, Column] = {}
-        need = set(self.algebraic)
-        if need & {"count", "mean", "variance", "stdev", "coefficient_of_variation"}:
-            aggs["_sum_c"] = F.sum(c)
-        if need & {"sum", "mean", "weighted_fraction", "variance", "stdev",
-                   "coefficient_of_variation"}:
-            aggs["_sum_xc"] = F.sum(v * c)
-        if need & {"variance", "stdev", "coefficient_of_variation"}:
-            aggs["_sum_xxc"] = F.sum(v * v * c)
-        if need & {"weighted_count", "weighted_mean", "weighted_variance",
-                   "weighted_stdev"}:
-            aggs["_sum_cw"] = F.sum(cw)
-        if need & {"weighted_sum", "weighted_mean", "weighted_fraction",
-                   "weighted_variance", "weighted_stdev"}:
-            aggs["_sum_xcw"] = F.sum(v * cw)
-        if need & {"weighted_variance", "weighted_stdev"}:
-            aggs["_sum_xxcw"] = F.sum(v * v * cw)
-        if "min" in need:
-            aggs["min"] = F.min(v)
-        if "max" in need:
-            aggs["max"] = F.max(v)
-        return [expr.alias(name) for name, expr in aggs.items()]
-
-    def result_names(self) -> list[str]:
-        """Output column order = requested stat order, with 'quantile'
-        expanded to q{NN} columns (reference column-naming rules,
-        R/exact_extract_helpers.R:28-115)."""
-        names: list[str] = []
-        for s in self.stats:
-            if s == "quantile":
-                names.extend(quantile_name(q) for q in self.quantiles)
-            elif s in ("frac", "weighted_frac"):
-                names.append(s)  # expanded later against the global value set
-            else:
-                names.append(s)
-        return names
+        sums = {
+            "_sum_c": c,
+            "_sum_xc": v * c,
+            "_sum_xxc": v * v * c,
+            "_sum_cw": cw,
+            "_sum_xcw": v * cw,
+            "_sum_xxcw": v * v * cw,
+        }
+        return self._moment_aggs(sums, v, v)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +30,22 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _feature_frame(ids, geoms: "list[G.Geometry]") -> pd.DataFrame:
+    """The ``FEATURE_SCHEMA`` frame of parsed geometries: id, WKB and the
+    four bbox columns."""
+    bounds = np.array([g.bounds() for g in geoms], dtype=np.float64).reshape(-1, 4)
+    return pd.DataFrame(
+        {
+            "feature_id": pd.Series(ids).astype("int64").to_numpy(),
+            "geom": [G.to_wkb(g) for g in geoms],
+            "fxmin": bounds[:, 0],
+            "fymin": bounds[:, 1],
+            "fxmax": bounds[:, 2],
+            "fymax": bounds[:, 3],
+        }
+    )
+
+
 def features_from_wkt(
     spark: SparkSession,
     wkts: Sequence[str],
@@ -38,26 +55,12 @@ def features_from_wkt(
     """Small driver-side helper (tests / API parity with sf input).
     ``crs`` (optional) stamps a crs column; zonal operators then verify it
     against the raster CRS and fail loudly on mismatch."""
-    rows = []
-    for i, wkt in enumerate(wkts):
-        g = G.from_wkt(wkt)
-        b = g.bounds()
-        fid = int(ids[i]) if ids is not None else i + 1
-        rows.append((fid, bytearray(G.to_wkb(g)), b[0], b[1], b[2], b[3]))
+    geoms = [G.from_wkt(w) for w in wkts]
+    fids = list(ids) if ids is not None else range(1, len(geoms) + 1)
     # pandas/Arrow conversion => a LocalTableScan: no python-RDD slices, so
     # downstream collects never round-trip python workers (a list-based
     # createDataFrame costs one worker round-trip PER SLICE per fresh plan)
-    pdf = pd.DataFrame(
-        {
-            "feature_id": pd.Series([r[0] for r in rows], dtype="int64"),
-            "geom": [bytes(r[1]) for r in rows],
-            "fxmin": pd.Series([r[2] for r in rows], dtype="float64"),
-            "fymin": pd.Series([r[3] for r in rows], dtype="float64"),
-            "fxmax": pd.Series([r[4] for r in rows], dtype="float64"),
-            "fymax": pd.Series([r[5] for r in rows], dtype="float64"),
-        }
-    )
-    out = spark.createDataFrame(pdf, FEATURE_SCHEMA)
+    out = spark.createDataFrame(_feature_frame(fids, geoms), FEATURE_SCHEMA)
     if crs is not None:
         out = out.withColumn("crs", F.lit(crs))
     return out
@@ -75,23 +78,11 @@ def prepare_features(
 
     def _prep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            geoms = []
-            bounds = []
-            for raw in pdf[geom_col]:
-                g = G.from_wkt(raw) if is_wkt else G.from_wkb(bytes(raw))
-                geoms.append(bytearray(G.to_wkb(g)))
-                bounds.append(g.bounds())
-            out = pd.DataFrame(
-                {
-                    "feature_id": pdf[id_col].astype("int64"),
-                    "geom": geoms,
-                    "fxmin": [b[0] for b in bounds],
-                    "fymin": [b[1] for b in bounds],
-                    "fxmax": [b[2] for b in bounds],
-                    "fymax": [b[3] for b in bounds],
-                }
-            )
-            yield out
+            geoms = [
+                G.from_wkt(raw) if is_wkt else G.from_wkb(bytes(raw))
+                for raw in pdf[geom_col]
+            ]
+            yield _feature_frame(pdf[id_col], geoms)
 
     out = df.select(id_col, geom_col).mapInPandas(_prep, FEATURE_SCHEMA)
     if crs is not None:
@@ -103,8 +94,6 @@ def transform_features(df: DataFrame, src_crs: str, dst_crs: str) -> DataFrame:
     """Reproject every feature geometry (closed-form CRS pairs only — see
     core/crs.py) and recompute bboxes; the crs column, if present, is
     restamped with the destination CRS."""
-    import numpy as np
-
     from ..core.crs import transform_geometry, transform_xy
 
     # fail fast on unsupported pairs (raises with guidance)
@@ -112,21 +101,11 @@ def transform_features(df: DataFrame, src_crs: str, dst_crs: str) -> DataFrame:
 
     def _tx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            geoms, bounds = [], []
-            for raw in pdf["geom"]:
-                g = transform_geometry(G.from_wkb(bytes(raw)), src_crs, dst_crs)
-                geoms.append(bytearray(G.to_wkb(g)))
-                bounds.append(g.bounds())
-            yield pd.DataFrame(
-                {
-                    "feature_id": pdf["feature_id"].astype("int64"),
-                    "geom": geoms,
-                    "fxmin": [b[0] for b in bounds],
-                    "fymin": [b[1] for b in bounds],
-                    "fxmax": [b[2] for b in bounds],
-                    "fymax": [b[3] for b in bounds],
-                }
-            )
+            geoms = [
+                transform_geometry(G.from_wkb(bytes(raw)), src_crs, dst_crs)
+                for raw in pdf["geom"]
+            ]
+            yield _feature_frame(pdf["feature_id"], geoms)
 
     out = df.select("feature_id", "geom").mapInPandas(_tx, FEATURE_SCHEMA)
     if "crs" in df.columns:

@@ -9,6 +9,12 @@ partial moments. The moments are pure sums plus min/max, so Spark's
 streaming state store merges each micro-batch in O(|features|) state with
 no re-scan of earlier tiles.
 
+The front half is the batch one too: ``zonal.feature_side`` reconciles
+the features' CRS with the raster's and collects the broadcast feature set
+(a table too large to broadcast is refused — there is no cover-join
+fallback on a stream), and ``zonal.prune_tiles`` cuts the streaming tiles to
+the feature bboxes' tile keys with a stateless stream-static join.
+
 Algebraic stats (count/sum/mean/min/max/variance/stdev/CV and weighted
 variants) stream as O(|features|) moment state. Frequency stats
 (mode/median/quantile/frac/variety/minority) stream too, as a
@@ -70,8 +76,7 @@ def stream_zonal_stats(
     if isinstance(stats, str):
         stats = [stats]
     plan = StatsPlan(stats, quantiles or [])
-    if plan.needs_weights and weights is None:
-        raise ValueError(f"stats {sorted(set(stats))} require weights")
+    plan.check_weights(weights)
     if weights is not None:
         if zonal.weight_disagg(meta.grid, weights.meta.grid) != (1, 1):
             raise ValueError(
@@ -79,11 +84,10 @@ def stream_zonal_stats(
                 "raster — batch-only; resample the weights first"
             )
 
-    # bounded like the batch path's build_candidates: one limit(N+1) job
-    # refuses loudly instead of landing an unbounded feature table on the
-    # driver (the streaming path has no cover-join fallback — features must
-    # broadcast)
-    fb = zonal.collect_feature_broadcast(features)
+    # the batch feature step (CRS reconciliation, bounded collect), before
+    # any query starts; the streaming path has no cover-join fallback —
+    # features must broadcast
+    _, fb = zonal.feature_side(features, meta)
     if fb is None:
         raise ValueError(
             f"streaming zonal requires a broadcastable feature table "
@@ -91,14 +95,15 @@ def stream_zonal_stats(
             "path has no raster-sequential cover-join fallback — partition the "
             "feature set or use the batch operator"
         )
-    feats_bc = spark.sparkContext.broadcast(fb)
 
     raw = (
         spark.readStream.schema(TILE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-    tiles = raw_tiles_with_meta(raw, layer=meta.layer)
+    tiles, feats_bc = zonal.prune_tiles(
+        raw_tiles_with_meta(raw, layer=meta.layer), meta, fb
+    )
     if weights is not None:
         wlists = zonal.static_weight_lists(meta, weights)
         # size-gate the broadcast hint exactly like the batch path: a large

@@ -69,6 +69,23 @@ def test_cli_weight_sources_mutually_exclusive(tmp_path):
         )
 
 
+def test_cli_checkpoint_refuses_weights(tmp_path):
+    """--checkpoint-dir has no weighted path: a weight source with it must
+    refuse before any input is read, not be dropped."""
+    from exactextractr_spark.cli import main
+
+    with pytest.raises(SystemExit, match="--checkpoint-dir"):
+        main(
+            [
+                "--polys", "p", "--tiles", "t",
+                "--stat", "weighted_mean(v,w)",
+                "--weight-layer", "w",
+                "--checkpoint-dir", str(tmp_path / "ck"),
+                "-o", str(tmp_path / "o"),
+            ]
+        )
+
+
 def test_cli_linear_mode(spark, tmp_path):
     """--linear routes to exact_extract_lines (length-weighted stats)."""
     from exactextractr_spark.cli import main

@@ -216,6 +216,37 @@ def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
     assert out[1]["count"] == pytest.approx(4.0)
 
 
+def test_fused_collect_keeps_a_margin(spark, monkeypatch):
+    """The fused bounded collect needs the optimizer estimate to fit
+    _FUSED_COLLECT_MARGIN times under _FUSED_COLLECT_MAX_BYTES. A cap
+    between the estimate and that multiple takes the count-first order: no
+    geometry reaches the driver before the count."""
+    from exactextractr_spark.operators import zonal
+    from exactextractr_spark.sources.features import features_from_wkt
+
+    r = Raster.from_array(spark, np.arange(1.0, 10.0).reshape(3, 3), meta33("v"))
+    feats = features_from_wkt(spark, [SQ_WKT])
+    SparkDF = type(feats)  # the concrete class that defines collect/count
+    est = int(str(feats._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", 2 * est)
+    events = []
+    real_collect, real_count = SparkDF.collect, SparkDF.count
+
+    def collect(self):
+        events.append("collect:geom" if "geom" in self.columns else "collect")
+        return real_collect(self)
+
+    def count(self):
+        events.append("count")
+        return real_count(self)
+
+    monkeypatch.setattr(SparkDF, "collect", collect)
+    monkeypatch.setattr(SparkDF, "count", count)
+    _, fb = zonal.build_candidates(r, feats)
+    assert fb is not None
+    assert events[:2] == ["count", "collect:geom"], events
+
+
 def test_blanket_feature_spans_trigger_early_bailout(spark):
     """A raster-spanning polygon must trip the blanket fallback from its
     SPAN (before enumerating tile keys): tile_side comes back unfiltered —

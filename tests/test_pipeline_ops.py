@@ -599,6 +599,9 @@ def test_checkpoint_resume(spark, tmp_path):
             ck.run(r, feats, ["count", "sum", "mean", "min", "max"]).collect()}
     assert out3 == out1
     assert out1[1]["count"] == pytest.approx(64.0)
+    # the checkpointed path takes no weights: weighted stats refuse loudly
+    with pytest.raises(ValueError, match="require weights"):
+        ck.run(r, feats, ["weighted_mean"])
 
 
 def test_streaming_ingest(spark, tmp_path):
@@ -1115,6 +1118,32 @@ def test_streaming_zonal_feature_collect_bounded(spark, tmp_path, monkeypatch):
             spark, str(tmp_path / "nosrc"), feats, ["count"], meta=meta,
             checkpoint_dir=str(tmp_path / "ck_guard"), query_name="zs_guard",
         )
+
+
+def test_streaming_zonal_reconciles_crs_before_start(spark, tmp_path):
+    """The streaming path runs the batch feature step: a feature table
+    mixing CRS-less rows with rows in another CRS is refused before any
+    streaming query starts."""
+    from exactextractr_spark.sources.features import features_from_wkt
+    from exactextractr_spark.sources.tiles import RasterMeta
+    from exactextractr_spark.streaming.zonal_stream import stream_zonal_stats
+
+    meta = RasterMeta("v", xmin=0, ymax=4, dx=1, dy=1, width=4, height=4,
+                      tile_w=4, tile_h=4, crs="EPSG:3857")
+    sq = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+    mixed = features_from_wkt(spark, [sq], ids=[1], crs="EPSG:4326").unionByName(
+        features_from_wkt(spark, [sq], ids=[2]).withColumn(
+            "crs", F.lit(None).cast("string")
+        )
+    )
+    (tmp_path / "src").mkdir()
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="mixes rows"):
+        stream_zonal_stats(
+            spark, str(tmp_path / "src"), mixed, ["count"], meta=meta,
+            checkpoint_dir=str(tmp_path / "ck_crs"), query_name="zs_crs",
+        )
+    assert len(spark.streams.active) == active
 
 
 def test_hamming_pairs_rejects_lossy_bands(spark):

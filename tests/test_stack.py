@@ -17,6 +17,25 @@ def meta33(layer):
                       tile_w=3, tile_h=3)
 
 
+def _merc_raster_and_ll_square(spark, layer="v", scale=1.0):
+    """A 3x3 EPSG:3857 raster spanning lon/lat [0, 0.03]^2 and an
+    EPSG:4326 square over its center cell."""
+    import math
+
+    r_earth = 6378137.0
+    x1 = r_earth * math.radians(0.03)
+    y1 = r_earth * math.log(math.tan(math.pi / 4 + math.radians(0.03) / 2))
+    meta = RasterMeta(layer, xmin=0, ymax=y1, dx=x1 / 3, dy=y1 / 3, width=3,
+                      height=3, tile_w=3, tile_h=3, crs="EPSG:3857")
+    arr = scale * np.arange(1, 10, dtype=np.float64).reshape(3, 3)
+    feats = features_from_wkt(
+        spark,
+        ["POLYGON ((0.01 0.01, 0.02 0.01, 0.02 0.02, 0.01 0.02, 0.01 0.01))"],
+        crs="EPSG:4326",
+    )
+    return Raster.from_array(spark, arr, meta), feats
+
+
 def test_stack_apply_naming(spark):
     # stack naming rules: multiple layers -> stat.layer
     # (R/exact_extract_helpers.R:28-93, tests at test_exact_extract.R:792-874)
@@ -99,6 +118,21 @@ def test_dense_coverage_crop_and_full(spark):
     dense2 = coverage_fraction_raster(r, far, crop=False).collect()
     assert len(dense2) == 1
     assert np.array(dense2[0]["cov_px"]).sum() == 0.0
+    # features in another CRS are reconciled exactly like the sparse form's:
+    # the dense blocks hold the same total coverage, cropped or not
+    import warnings
+
+    from exactextractr_spark.operators.coverage_op import coverage_fraction_df
+
+    merc, feats_ll = _merc_raster_and_ll_square(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        want = sum(row["cov"] for row in coverage_fraction_df(merc, feats_ll).collect())
+        assert want > 0.5
+        for crop in (True, False):
+            dense = coverage_fraction_raster(merc, feats_ll, crop=crop).collect()
+            got = sum(np.array(row["cov_px"]).sum() for row in dense)
+            assert got == pytest.approx(want, rel=1e-9), crop
 
 
 def test_summarize_df_combined_frame(spark):
@@ -429,6 +463,20 @@ def test_crs_auto_transform_4326_to_3857(spark):
     feats_bad = features_from_wkt(spark, [wkt_ll], crs="EPSG:27200")
     with pytest.raises(ValueError, match="no closed-form transform"):
         exact_extract(r, feats_bad, ["count"])
+    # the stack's single pass reconciles the CRS like its per-layer loop
+    from exactextractr_spark.operators import stack as stack_mod
+
+    ra, feats_ll = _merc_raster_and_ll_square(spark, "a")
+    rb, _ = _merc_raster_and_ll_square(spark, "b", scale=2.0)
+    stats = ["count", "sum", "mean"]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        assert stack_mod._stack_single_pass([ra, rb], feats_ll, stats) is not None
+        single = exact_extract_stack([ra, rb], feats_ll, stats).collect()
+        loop = exact_extract_stack([ra, rb], feats_ll, stats,
+                                   single_pass=False).collect()
+    assert [row.asDict() for row in single] == [row.asDict() for row in loop]
+    assert single[0]["count.a"] == pytest.approx(want["count"], rel=1e-9)
 
 
 def test_utm_transform_series():
