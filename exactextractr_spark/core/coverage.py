@@ -30,6 +30,23 @@ contributes |coverage|, each interior ring subtracts |coverage|
 (``raster_cell_intersection.cpp:308-310, 423-431``); overlapping polygons in
 an invalid MultiPolygon therefore sum, so fractions may exceed 1
 (``R/exact_extract.R:30-31``).
+
+Batched pass. ``coverage_fraction_many`` computes many (grid, geometry)
+pairs in one vectorized pass — the per-tile kernels call it once per Arrow
+batch, because a pair of a few hundred cells costs far more in numpy call
+overhead than in arithmetic. Every ring of every pair becomes one *unit*;
+all units' edges go through ``_split_segments_to_cells`` together, each
+edge carrying its own grid bounds, and the partial-width (A) and winding
+(C) terms land in one ``bincount`` each. The cell layout is unpadded, with
+units ordered by ``ncols`` (stably), so each run of equal ``ncols`` is one
+``(rows, ncols)`` matrix whose per-row prefix sum is the prefix sum of the
+single-pair computation. The result is bit-identical to running each pair
+alone: every step is elementwise except the bincount (a sequential sum
+over the unit's own pieces, in their single-pair order, into bins no other
+unit touches) and the row prefix sum (sequential within one grid row);
+rings then combine into their pair in ring order, as a single pair does.
+``CELL_BUDGET`` caps the cells one pass lays out, so scratch memory stays
+bounded however many pairs or rings a call holds.
 """
 
 from __future__ import annotations
@@ -40,64 +57,101 @@ from .geom import Geometry, signed_area
 from .grid import Box, Grid
 
 __all__ = [
+    "CELL_BUDGET",
+    "budget_chunks",
     "coverage_fraction",
-    "coverage_fraction_ring",
+    "coverage_fraction_many",
     "rect_coverage",
     "cell_lengths",
 ]
 
+#: cells one vectorized coverage pass lays out at once (a few float64
+#: arrays each): callers chunk their pairs by it and ``coverage_fraction_many``
+#: slices its rings by it; a single larger unit runs alone. One 256×256
+#: tile: larger chunks outgrow the CPU cache and run full-tile pairs slower
+#: than one pair at a time, while a chunk of small pairs already amortizes
+#: the per-call overhead
+CELL_BUDGET = 1 << 16
 
-def _exclusive_cumsum(a: np.ndarray, axis: int = -1) -> np.ndarray:
-    out = np.cumsum(a, axis=axis)
-    out = np.roll(out, 1, axis=axis)
-    if axis in (-1, a.ndim - 1):
-        out[..., 0] = 0.0
-    else:
-        raise ValueError("only last-axis supported")
+
+def budget_chunks(sizes, budget: int) -> "list[tuple[int, int]]":
+    """Consecutive ``[start, stop)`` ranges of ``sizes`` whose sum stays
+    within ``budget`` (an item larger than the budget forms its own range)."""
+    out, start, held = [], 0, 0
+    for i, n in enumerate(sizes):
+        if held and held + n > budget:
+            out.append((start, i))
+            start, held = i, 0
+        held += n
+    if start < len(sizes):
+        out.append((start, len(sizes)))
     return out
 
 
+def _exclusive_cumsum(a: np.ndarray) -> np.ndarray:
+    """Per-row exclusive prefix sum along the last axis (sequential adds)."""
+    out = np.cumsum(a, axis=-1)
+    out = np.roll(out, 1, axis=-1)
+    out[..., 0] = 0.0
+    return out
+
+
+def _grid_bounds(grid: Grid) -> tuple:
+    return (grid.xmin, grid.ymin, grid.xmax, grid.ymax, grid.dx, grid.dy,
+            grid.nrows, grid.ncols)
+
+
+def _take(bounds: tuple, idx: np.ndarray) -> tuple:
+    return tuple(b[idx] if np.ndim(b) else b for b in bounds)
+
+
 def _split_segments_to_cells(
-    pts0: np.ndarray, pts1: np.ndarray, grid: Grid, clamp_x: bool,
+    pts0: np.ndarray, pts1: np.ndarray, bounds: tuple, clamp_x: bool,
     inclusive_y: bool = False,
 ):
     """Split directed segments at all cell-row and cell-column boundaries.
 
-    Returns (row, col, xa, ya, xb, yb) arrays of final sub-segments, each
-    lying within a single grid cell. Segments are first clipped to the grid's
-    y-extent (parts outside contribute nothing to any cell's integral) and,
-    when ``clamp_x``, split at the grid's x-limits with outside parts clamped
-    onto the boundary (preserving their winding contribution, which is how
-    the reference's processing-region crop behaves,
-    ``raster_cell_intersection.cpp:50-95``).
-    """
-    gx0, gy0, gx1, gy1 = grid.xmin, grid.ymin, grid.xmax, grid.ymax
-    dx, dy = grid.dx, grid.dy
-    nrows, ncols = grid.nrows, grid.ncols
+    ``bounds`` is the grid as ``(xmin, ymin, xmax, ymax, dx, dy, nrows,
+    ncols)``; each entry is a scalar shared by all segments or an array
+    with one value per segment (the batched pass splits every ring of every
+    pair at once). Every operation is elementwise, so a segment's pieces
+    are the same whichever other segments share the call.
 
+    Returns (src, row, col, xa, ya, xb, yb) arrays of final sub-segments,
+    each lying within a single grid cell of its segment's grid; ``src`` is
+    the index of the input segment a piece came from. Segments are first
+    clipped to the grid's y-extent (parts outside contribute nothing to any
+    cell's integral) and, when ``clamp_x``, split at the grid's x-limits
+    with outside parts clamped onto the boundary (preserving their winding
+    contribution, which is how the reference's processing-region crop
+    behaves, ``raster_cell_intersection.cpp:50-95``).
+    """
     x0 = pts0[:, 0].astype(np.float64)
     y0 = pts0[:, 1].astype(np.float64)
     x1 = pts1[:, 0].astype(np.float64)
     y1 = pts1[:, 1].astype(np.float64)
+    empty = (np.empty(0, np.int64),) * 3 + (np.empty(0, np.float64),) * 4
 
     # ---- clip to grid y-range (drop outside parts) ----
     # strict for the areal path (a zero-measure boundary edge has no area
     # integral); inclusive for the line path, where a segment lying exactly
     # ON the boundary carries real length (rows/cols clamp into range)
-    dy_e = y1 - y0
+    gy0, gy1 = bounds[1], bounds[3]
     if inclusive_y:
         keep = np.maximum(y0, y1) >= gy0
         keep &= np.minimum(y0, y1) <= gy1
     else:
         keep = np.maximum(y0, y1) > gy0
         keep &= np.minimum(y0, y1) < gy1
-    x0, y0, x1, y1, dy_e = x0[keep], y0[keep], x1[keep], y1[keep], dy_e[keep]
+    src = np.nonzero(keep)[0]
+    x0, y0, x1, y1 = x0[src], y0[src], x1[src], y1[src]
     if len(x0) == 0:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0, np.float64),) * 4
+        return empty
+    bounds = _take(bounds, src)
+    gx0, gy0, gx1, gy1 = bounds[:4]
+    dy_e = y1 - y0
 
     nz = dy_e != 0
-    t_lo = np.zeros(len(x0))
-    t_hi = np.ones(len(x0))
     with np.errstate(divide="ignore", invalid="ignore"):
         ta = np.where(nz, (gy0 - y0) / dy_e, 0.0)
         tb = np.where(nz, (gy1 - y0) / dy_e, 1.0)
@@ -112,10 +166,11 @@ def _split_segments_to_cells(
 
     # ---- split at grid x-limits, clamp outside x onto the boundary ----
     if clamp_x:
-        segs = [(xa, ya, xb, yb)]
-        for bound in (gx0, gx1):
+        segs = [(xa, ya, xb, yb, np.arange(len(xa)))]
+        for limit in (gx0, gx1):
             nxt = []
-            for sxa, sya, sxb, syb in segs:
+            for sxa, sya, sxb, syb, sidx in segs:
+                bound = limit[sidx] if np.ndim(limit) else limit
                 dx_e = sxb - sxa
                 crosses = ((sxa - bound) * (sxb - bound) < 0) & (dx_e != 0)
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -123,23 +178,26 @@ def _split_segments_to_cells(
                 xm = np.where(crosses, bound, sxb)
                 ym = np.where(crosses, sya + t * (syb - sya), syb)
                 # piece 1: (a -> m), piece 2: (m -> b); piece 2 empty unless crossing
-                nxt.append((sxa, sya, xm, ym))
+                nxt.append((sxa, sya, xm, ym, sidx))
                 if crosses.any():
                     idx = np.nonzero(crosses)[0]
-                    nxt.append((xm[idx], ym[idx], sxb[idx], syb[idx]))
+                    nxt.append((xm[idx], ym[idx], sxb[idx], syb[idx], sidx[idx]))
             segs = nxt
-        xa = np.concatenate([s[0] for s in segs])
-        ya = np.concatenate([s[1] for s in segs])
-        xb = np.concatenate([s[2] for s in segs])
-        yb = np.concatenate([s[3] for s in segs])
+        xa, ya, xb, yb, piece = (np.concatenate(c) for c in zip(*segs))
+        src, bounds = src[piece], _take(bounds, piece)
+        gx0, gx1 = bounds[0], bounds[2]
         xa = np.clip(xa, gx0, gx1)
         xb = np.clip(xb, gx0, gx1)
 
     # drop zero-length pieces
-    live = (xa != xb) | (ya != yb)
+    live = np.nonzero((xa != xb) | (ya != yb))[0]
     xa, ya, xb, yb = xa[live], ya[live], xb[live], yb[live]
     if len(xa) == 0:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0, np.float64),) * 4
+        return empty
+    src = src[live]
+    gx0, gy1, dx, dy, nrows, ncols = _take(
+        (bounds[0], bounds[3], bounds[4], bounds[5], bounds[6], bounds[7]), live
+    )
 
     # ---- split at row boundaries ----
     r_a = np.clip(np.floor((gy1 - np.maximum(ya, yb)) / dy).astype(np.int64), 0, nrows - 1)
@@ -149,6 +207,8 @@ def _split_segments_to_cells(
     eidx = np.repeat(np.arange(len(xa)), nseg)
     offs = np.arange(total) - np.repeat(np.cumsum(nseg) - nseg, nseg)
     row = r_a[eidx] + offs
+    src = src[eidx]
+    gx0, gy1, dx, dy, ncols = _take((gx0, gy1, dx, dy, ncols), eidx)
 
     exa, eya, exb, eyb = xa[eidx], ya[eidx], xb[eidx], yb[eidx]
     row_top = gy1 - row * dy
@@ -175,6 +235,8 @@ def _split_segments_to_cells(
     sidx = np.repeat(np.arange(len(sxa)), ncseg)
     coffs = np.arange(total2) - np.repeat(np.cumsum(ncseg) - ncseg, ncseg)
     col = c_a[sidx] + coffs
+    src = src[sidx]
+    gx0, dx = _take((gx0, dx), sidx)
 
     fxa, fya, fxb, fyb = sxa[sidx], sya[sidx], sxb[sidx], syb[sidx]
     erow = row[sidx]
@@ -196,38 +258,7 @@ def _split_segments_to_cells(
     # preserve direction: tlo2/thi2 sort by t along the segment, which is the
     # original direction, so (pa -> pb) keeps the edge's orientation.
 
-    return erow, col, pxa, pya, pxb, pyb
-
-
-def coverage_fraction_ring(grid: Grid, ring: np.ndarray) -> np.ndarray:
-    """Signed coverage fraction of one ring, sign = ring orientation
-    (CCW positive). Exact closed-form integration, see module docstring."""
-    nrows, ncols = grid.nrows, grid.ncols
-    out = np.zeros((nrows, ncols), dtype=np.float64)
-    if nrows == 0 or ncols == 0 or len(ring) < 3:
-        return out
-    pts = np.asarray(ring, dtype=np.float64)
-    if not (pts[0] == pts[-1]).all():
-        pts = np.vstack([pts, pts[0]])
-    p0, p1 = pts[:-1], pts[1:]
-    horiz = p0[:, 1] == p1[:, 1]
-    p0, p1 = p0[~horiz], p1[~horiz]
-    if len(p0) == 0:
-        return out
-    row, col, xa, ya, xb, yb = _split_segments_to_cells(p0, p1, grid, clamp_x=True)
-    if len(row) == 0:
-        return out
-    d_y = yb - ya  # signed along edge direction
-    col_r = grid.xmin + (col + 1) * grid.dx
-    xm = 0.5 * (xa + xb)
-    flat = row * ncols + col
-    n = nrows * ncols
-    # A: partial-width term inside the crossed cell; C: winding deposit
-    A = np.bincount(flat, weights=-d_y * (col_r - xm), minlength=n).reshape(nrows, ncols)
-    C = np.bincount(flat, weights=-d_y, minlength=n).reshape(nrows, ncols)
-    out = A + grid.dx * _exclusive_cumsum(C, axis=-1)
-    out /= grid.dx * grid.dy
-    return out
+    return src, erow, col, pxa, pya, pxb, pyb
 
 
 def reject_mixed_collection(geom: Geometry) -> None:
@@ -246,6 +277,121 @@ def reject_mixed_collection(geom: Geometry) -> None:
         )
 
 
+def _check_areal(geom: Geometry) -> None:
+    reject_mixed_collection(geom)
+    if not geom.polygons() and (
+        geom.linestrings() or geom.kind in ("Point", "MultiPoint")
+    ):
+        raise ValueError(
+            f"geometry of kind {geom.kind!r} is not polygonal; areal stats "
+            "need polygons — use exact_extract_lines for linear features"
+        )
+
+
+def _ring_units(grids, geoms, sizes):
+    """(pair, closed ring, sign) for every ring that can cover a cell, in
+    (pair, polygon, ring) order; sign = +orientation for an exterior ring,
+    −orientation for a hole (CCW positive)."""
+    units = []
+    for p, geom in enumerate(geoms):
+        if sizes[p] == 0:
+            continue
+        for rings in geom.polygons():
+            for i, ring in enumerate(rings):
+                if len(ring) < 3:
+                    continue
+                pts = np.asarray(ring, dtype=np.float64)
+                orient = 1.0 if signed_area(pts) >= 0 else -1.0
+                if not (pts[0] == pts[-1]).all():
+                    pts = np.vstack([pts, pts[0]])
+                units.append((p, pts, orient if i == 0 else -orient))
+    return units
+
+
+def _deposit(units, bounds, offs, buf) -> None:
+    """Add the signed coverage of ``units`` (see ``_ring_units``) into the
+    pair outputs in ``buf`` (pair ``p`` owns ``buf[offs[p]:offs[p+1]]``)."""
+    pair = np.array([u[0] for u in units], dtype=np.int64)
+    ub = _take(bounds, pair)  # per-unit grid
+    nrows, ncols = ub[6], ub[7]
+    edges = np.array([len(u[1]) - 1 for u in units], dtype=np.int64)
+    p0 = np.concatenate([u[1][:-1] for u in units])
+    p1 = np.concatenate([u[1][1:] for u in units])
+    tag = np.repeat(np.arange(len(units)), edges)
+    slant = np.nonzero(p0[:, 1] != p1[:, 1])[0]  # horizontal edges add nothing
+    p0, p1, tag = p0[slant], p1[slant], tag[slant]
+    if len(tag) == 0:
+        return
+    src, row, col, xa, ya, xb, yb = _split_segments_to_cells(
+        p0, p1, _take(ub, tag), clamp_x=True
+    )
+    if len(src) == 0:
+        return
+    u = tag[src]
+    # unpadded cell layout, units stably ordered by ncols: each run of equal
+    # ncols is one (rows, ncols) matrix
+    order = np.argsort(ncols, kind="stable")
+    size = nrows * ncols
+    start = np.empty(len(units), dtype=np.int64)
+    start[order] = np.cumsum(size[order]) - size[order]
+    total = int(size.sum())
+
+    d_y = yb - ya  # signed along edge direction
+    col_r = ub[0][u] + (col + 1) * ub[4][u]
+    xm = 0.5 * (xa + xb)
+    flat = start[u] + row * ncols[u] + col
+    # A: partial-width term inside the crossed cell; C: winding deposit
+    A = np.bincount(flat, weights=-d_y * (col_r - xm), minlength=total)
+    C = np.bincount(flat, weights=-d_y, minlength=total)
+    runs = np.nonzero(np.diff(ncols[order]))[0] + 1
+    for a, b in zip(np.r_[0, runs], np.r_[runs, len(order)]):
+        k = order[a:b]
+        lo, hi, nc = start[k[0]], start[k[-1]] + size[k[-1]], ncols[k[0]]
+        dx = np.repeat(ub[4][k], nrows[k])[:, None]
+        dxdy = np.repeat(ub[4][k] * ub[5][k], nrows[k])[:, None]
+        run = A[lo:hi].reshape(-1, nc) + dx * _exclusive_cumsum(C[lo:hi].reshape(-1, nc))
+        run /= dxdy
+        run = run.ravel()
+        # add each ring into its pair; the stable order keeps a pair's
+        # rings in ring order
+        for q, at, n in zip(k.tolist(), (start[k] - lo).tolist(), size[k].tolist()):
+            p, sign = units[q][0], units[q][2]
+            out = buf[offs[p]:offs[p + 1]]
+            out += run[at:at + n] if sign == 1.0 else run[at:at + n] * sign
+
+
+def coverage_fraction_many(grids, geoms) -> "list[np.ndarray]":
+    """Per-cell covered fraction of each (grid, geometry) pair, in one
+    vectorized pass (see module docstring); element ``i`` is bit-identical
+    to the pair computed alone, whatever else shares the call. Every
+    geometry is checked (``coverage_fraction``'s refusals) before any
+    coverage is computed."""
+    for geom in geoms:
+        _check_areal(geom)
+    bounds = (
+        np.array([g.xmin for g in grids], dtype=np.float64),
+        np.array([g.ymin for g in grids], dtype=np.float64),
+        np.array([g.xmax for g in grids], dtype=np.float64),
+        np.array([g.ymax for g in grids], dtype=np.float64),
+        np.array([g.dx for g in grids], dtype=np.float64),
+        np.array([g.dy for g in grids], dtype=np.float64),
+        np.array([g.nrows for g in grids], dtype=np.int64),
+        np.array([g.ncols for g in grids], dtype=np.int64),
+    )
+    sizes = (bounds[6] * bounds[7]).tolist()
+    offs = [0] + np.cumsum(sizes, dtype=np.int64).tolist()
+    buf = np.zeros(offs[-1])
+    units = _ring_units(grids, geoms, sizes)
+    for a, b in budget_chunks([sizes[u[0]] for u in units], CELL_BUDGET):
+        _deposit(units[a:b], bounds, offs, buf)
+    # tiny negative fuzz from float cancellation
+    np.maximum(buf, 0.0, out=buf)
+    return [
+        buf[offs[i]:offs[i + 1]].reshape(nr, nc)
+        for i, (nr, nc) in enumerate(zip(bounds[6].tolist(), bounds[7].tolist()))
+    ]
+
+
 def coverage_fraction(grid: Grid, geom: Geometry) -> np.ndarray:
     """Per-cell covered fraction in [0, 1] for a (Multi)Polygon /
     GeometryCollection. Exterior rings add |cov|, holes subtract
@@ -255,25 +401,7 @@ def coverage_fraction(grid: Grid, geom: Geometry) -> np.ndarray:
     non-polygonal features on the areal path,
     test_exact_extract_errors.R:38-45); genuinely empty geometries yield
     all-zero coverage (the feature keeps its NA row downstream)."""
-    reject_mixed_collection(geom)
-    if not geom.polygons() and (
-        geom.linestrings() or geom.kind in ("Point", "MultiPoint")
-    ):
-        raise ValueError(
-            f"geometry of kind {geom.kind!r} is not polygonal; areal stats "
-            "need polygons — use exact_extract_lines for linear features"
-        )
-    out = np.zeros((grid.nrows, grid.ncols), dtype=np.float64)
-    for rings in geom.polygons():
-        for i, ring in enumerate(rings):
-            if len(ring) < 3:
-                continue
-            cov = coverage_fraction_ring(grid, ring)
-            orient = 1.0 if signed_area(np.asarray(ring, dtype=np.float64)) >= 0 else -1.0
-            out += cov * (orient if i == 0 else -orient)
-    # tiny negative fuzz from float cancellation
-    np.maximum(out, 0.0, out=out)
-    return out
+    return coverage_fraction_many([grid], [geom])[0]
 
 
 def rect_coverage(grid: Grid, box: Box) -> np.ndarray:
@@ -352,8 +480,8 @@ def cell_lengths(
             q0, q1 = q0[~on_right], q1[~on_right]
         if len(q0) == 0:
             continue
-        row, col, xa, ya, xb, yb = _split_segments_to_cells(
-            q0, q1, grid, clamp_x=False, inclusive_y=True
+        _, row, col, xa, ya, xb, yb = _split_segments_to_cells(
+            q0, q1, _grid_bounds(grid), clamp_x=False, inclusive_y=True
         )
         if len(row) == 0:
             continue

@@ -191,7 +191,7 @@ def coverage_fraction_raster(
     from pyspark.sql import types as T
 
     from ..core import geom as G
-    from ..core.coverage import coverage_fraction
+    from ..core.coverage import CELL_BUDGET, budget_chunks, coverage_fraction_many
     from ..core.grid import Grid
 
     from .zonal import cover_candidates, feature_side
@@ -247,12 +247,12 @@ def coverage_fraction_raster(
 
     def _dense(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
+            rows, grids, geoms = [], [], []
             for row in pdf.itertuples(index=False):
                 tile_grid = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
                 for ft in row.feats:
-                    geom = G.from_wkb(bytes(ft["geom"]))
-                    cov = coverage_fraction(tile_grid, geom)
+                    grids.append(tile_grid)
+                    geoms.append(G.from_wkb(bytes(ft["geom"])))
                     rows.append(
                         {
                             "feature_id": ft["feature_id"],
@@ -260,9 +260,13 @@ def coverage_fraction_raster(
                             "tile_col": row.tile_col,
                             "nrows": tile_grid.nrows,
                             "ncols": tile_grid.ncols,
-                            "cov_px": cov.ravel(),
                         }
                     )
+            # one batched coverage pass per chunk of the batch's pairs
+            for a, b in budget_chunks([g.size for g in grids], CELL_BUDGET):
+                covs = coverage_fraction_many(grids[a:b], geoms[a:b])
+                for out, cov in zip(rows[a:b], covs):
+                    out["cov_px"] = cov.ravel()
             if rows:
                 yield pd.DataFrame(rows)
 

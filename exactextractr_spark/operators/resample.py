@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.grid import Grid
 from ..sources.tiles import Raster, RasterMeta, tile_pixels
 
 _FACTS = T.StructType(
@@ -144,10 +143,7 @@ def resample_facts(
                     continue
                 cov = (wx * wy) / (row.dx * row.dy)
                 if coverage_area:
-                    tile_grid = Grid(
-                        row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy
-                    )
-                    cov = cov * cell_areas(tile_grid, sr, spherical)
+                    cov = cov * cell_areas(row.ymax, row.dx, row.dy, sr, spherical)
                 outs.append((dr.astype(np.int32), dc.astype(np.int32), v, cov))
             if outs:
                 # ONE frame per Arrow batch (np.concatenate of column

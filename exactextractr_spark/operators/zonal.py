@@ -15,7 +15,8 @@ tile-key equi-join Catalyst can broadcast or shuffle-hash):
                                                                         ▼
           equi-join on (tile_row, tile_col)  +  exact bbox refine
                                                                         ▼
-          coverage kernel (mapInPandas, Arrow-vectorized) → sparse facts
+          coverage kernel (mapInPandas): one vectorized coverage pass per
+          Arrow batch (``coverage_fraction_many``) → sparse facts
                                                                         ▼
      groupBy(feature_id).agg(all algebraic stats)   [+ groupBy(fid, v)
      for frequency stats; quantiles interpolate JVM-side from one window
@@ -34,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import geom as G
-from ..core.coverage import coverage_fraction
+from ..core import coverage
+from ..core.coverage import budget_chunks, coverage_fraction_many
 from ..core.grid import Box, Grid
 from ..plans.stats import ZERO_FILL, StatsPlan, quantile_name
 from ..sources.tiles import Raster, tile_pixels
@@ -90,19 +92,21 @@ MOMENTS_SCHEMA = T.StructType(
 )
 
 
-def cell_areas(grid: Grid, rows: np.ndarray, spherical: bool) -> np.ndarray:
-    """Cell area per row index — cartesian constant or per-latitude-band
-    spherical (ref raster_area.h:21-69, authalic radius 6378137)."""
+def cell_areas(ymax, dx, dy, rows: np.ndarray, spherical: bool) -> np.ndarray:
+    """Cell area per row index of a grid with top edge ``ymax`` and cell
+    size ``dx`` × ``dy`` (scalars, or one value per row index) — cartesian
+    constant or per-latitude-band spherical (ref raster_area.h:21-69,
+    authalic radius 6378137)."""
     if not spherical:
-        return np.full(len(rows), grid.dx * grid.dy)
-    y_top = grid.ymax - rows * grid.dy
-    y_bot = y_top - grid.dy
+        return np.full(len(rows), dx * dy)
+    y_top = ymax - rows * dy
+    y_bot = y_top - dy
     return (
         EARTH_RADIUS
         * EARTH_RADIUS
         * _PI180
         * np.abs(np.sin(y_bot * _PI180) - np.sin(y_top * _PI180))
-        * grid.dx
+        * dx
     )
 
 
@@ -679,22 +683,161 @@ def coverage_facts(
       algebraic stats.
 
     Tiles of a value-less raster (``tile_pixels`` returns None) read as 0.
+
+    Each Arrow batch first gathers its candidate pairs, then computes their
+    coverage in chunks of at most ``core.coverage.CELL_BUDGET`` cells (read
+    when the plan is built), one ``coverage_fraction_many`` call and one
+    vectorized pass over the covered cells per chunk. Rows are those of a
+    per-pair loop, bit for bit and in the same order.
     """
     raster_xmin = values_meta.xmin
     raster_ymax = values_meta.ymax
     raster_width = values_meta.width
     need_area = coverage_area or area_weights or emit == "pixels"
+    budget = coverage.CELL_BUDGET
+    fx, fy = disagg
+    has_w = "wtiles" in cand.columns
+
+    def _chunk_facts(tiles, pairs) -> "list | None":
+        """Output columns of one chunk. ``tiles``: (row, px, tile_grid) of
+        the batch; ``pairs``: (tile index, feature_id, sub, samp, geom), in
+        tile order. Every cell-level step is elementwise over the
+        chunk; the moments sums stay one reduction per pair."""
+        samps = [p[3] for p in pairs]
+        rrs, ccs, covvs = [], [], []
+        for cov in coverage_fraction_many(samps, [p[4] for p in pairs]):
+            hit = cov > 0
+            rr, cc = np.nonzero(hit)
+            rrs.append(rr)
+            ccs.append(cc)
+            covvs.append(cov[hit])
+        counts = np.array([len(rr) for rr in rrs], dtype=np.int64)
+        if not counts.any():
+            return None
+        rr, cc, covv = np.concatenate(rrs), np.concatenate(ccs), np.concatenate(covvs)
+        # a pair's cells are one contiguous range: per-pair scalars expand
+        # with np.repeat
+        tix = np.array([p[0] for p in pairs], dtype=np.int64)
+        off = np.array([tiles[p[0]][2].row_col_offset(p[2]) for p in pairs],
+                       dtype=np.int64).reshape(-1, 2)
+        tr = (rr // fy if fy > 1 else rr) + np.repeat(off[:, 0], counts)
+        tc = (cc // fx if fx > 1 else cc) + np.repeat(off[:, 1], counts)
+
+        def tile_ranges():
+            # cells of one tile are one contiguous range (pairs grouped by tile)
+            t, first = np.unique(tix, return_index=True)
+            bnd = np.r_[0, np.cumsum(counts)][np.r_[first, len(tix)]].tolist()
+            return zip([tiles[i] for i in t.tolist()], bnd[:-1], bnd[1:])
+
+        v = np.zeros(len(rr))
+        for (_, px, _), a, b in tile_ranges():
+            if px is not None and a < b:
+                v[a:b] = px[tr[a:b], tc[a:b]]
+        if default_value is not None:
+            v = np.where(np.isnan(v), default_value, v)
+        if not keep_nodata:
+            ok = ~np.isnan(v)
+            if not ok.all():
+                counts = np.bincount(np.repeat(np.arange(len(pairs)), counts)[ok],
+                                     minlength=len(pairs))
+                rr, cc, tr, tc, v, covv = (a[ok] for a in (rr, cc, tr, tc, v, covv))
+            if len(v) == 0:
+                return None
+        n = len(v)
+
+        def per_cell(attr):
+            values = np.array([getattr(s, attr) for s in samps], dtype=np.float64)
+            return np.repeat(values, counts)
+
+        if has_w or emit == "pixels":
+            # cell centers in world coords, at sampling resolution
+            cx = per_cell("xmin") + (cc + 0.5) * per_cell("dx")
+            cy = per_cell("ymax") - (rr + 0.5) * per_cell("dy")
+        area = (
+            cell_areas(per_cell("ymax"), per_cell("dx"), per_cell("dy"), rr, spherical)
+            if need_area else None
+        )
+        if coverage_area:
+            covv = covv * area
+        if area_weights:
+            w = area
+        elif has_w:
+            w = np.full(n, np.nan)
+            for (row, _, _), a, b in tile_ranges():
+                for wt in (row.wtiles if row.wtiles is not None else []):
+                    wpx = np.asarray(wt["px"], dtype=np.float64).reshape(
+                        int(wt["nrows"]), int(wt["ncols"])
+                    )
+                    wr = np.floor((wt["ymax"] - cy[a:b]) / wt["dy"]).astype(np.int64)
+                    wc = np.floor((cx[a:b] - wt["xmin"]) / wt["dx"]).astype(np.int64)
+                    sel = (
+                        (wr >= 0)
+                        & (wr < int(wt["nrows"]))
+                        & (wc >= 0)
+                        & (wc < int(wt["ncols"]))
+                    )
+                    if sel.any():
+                        w[a:b][sel] = wpx[wr[sel], wc[sel]]
+            if default_weight is not None:
+                w = np.where(np.isnan(w), default_weight, w)
+        else:
+            w = np.full(n, np.nan)
+        fid = np.array([p[1] for p in pairs], dtype=np.int64)
+        layer = (
+            np.array([tiles[p[0]][0].layer for p in pairs], dtype=object)
+            if by_layer else None
+        )
+        if emit == "moments":
+            # ONE row per pair with cells: per-pair sums of the chunk's
+            # elementwise products
+            cw = covv * w
+            vc = v * covv
+            vcw = v * cw
+            terms = (covv, vc, v * vc, cw, vcw, v * vcw)
+            bnd = np.r_[0, np.cumsum(counts)].tolist()
+            hit = np.flatnonzero(counts)
+            out = np.empty((len(hit), 8))
+            for k, p in enumerate(hit.tolist()):
+                a, b = bnd[p], bnd[p + 1]
+                out[k, :6] = [t[a:b].sum() for t in terms]
+                out[k, 6] = v[a:b].min()
+                out[k, 7] = v[a:b].max()
+            cols = [fid[hit]] + ([layer[hit]] if by_layer else [])
+            return cols + list(out.T)
+        if emit == "freq":
+            # one (pair, value) key per cell; a key's sums add its cells in
+            # the order a per-pair bincount would
+            pi = np.repeat(np.arange(len(pairs)), counts)
+            uv, vinv = np.unique(v, return_inverse=True)
+            ukey, kinv = np.unique(pi * len(uv) + vinv, return_inverse=True)
+            gp = ukey // len(uv)
+            cols = [fid[gp]] + ([layer[gp]] if by_layer else [])
+            return cols + [
+                uv[ukey % len(uv)],
+                np.bincount(kinv, weights=covv),
+                np.bincount(kinv, weights=covv * w),
+            ]
+        # 1-based row-major cell index of the VALUE raster, even when
+        # disaggregated (ref raster_utils.cpp:53-118)
+        tg = np.array(
+            [(int(round((raster_ymax - g.ymax) / g.dy)),
+              int(round((g.xmin - raster_xmin) / g.dx)))
+             for g in (tiles[p[0]][2] for p in pairs)],
+            dtype=np.int64,
+        ).reshape(-1, 2)
+        grow = np.repeat(tg[:, 0], counts) + tr
+        gcol = np.repeat(tg[:, 1], counts) + tc
+        cell = (grow * raster_width + gcol + 1).astype(np.int64)
+        return [np.repeat(fid, counts), v, w, covv, cell, cx, cy, area]
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         candidates = candidate_loop(feats_bc)
-        fx, fy = disagg
         for pdf in batches:
-            outs = []
-            has_w = "wtiles" in pdf.columns
+            tiles, pairs = [], []
             for row in pdf.itertuples(index=False):
                 # decode this tile's pixels ONCE for all its features
-                px = tile_pixels(row)
                 tile_grid = Grid(row.xmin, row.ymin, row.xmax, row.ymax, row.dx, row.dy)
+                tiles.append((row, tile_pixels(row), tile_grid))
                 for feature_id, geom, bbox in candidates(row):
                     sub = tile_grid.crop(Box(*bbox))
                     if sub.size == 0:
@@ -710,128 +853,20 @@ def coverage_facts(
                         )
                     else:
                         samp = sub
-                    cov = coverage_fraction(samp, geom)
-                    rr, cc = np.nonzero(cov > 0)
-                    if len(rr) == 0:
-                        continue
-                    covv = cov[rr, cc]
-                    # offsets of the cropped grid within the tile
-                    r_off, c_off = tile_grid.row_col_offset(sub)
-                    tr = rr // fy + r_off
-                    tc = cc // fx + c_off
-                    v = np.zeros(len(rr)) if px is None else px[tr, tc]
-                    if default_value is not None:
-                        v = np.where(np.isnan(v), default_value, v)
-                    if not keep_nodata:
-                        ok = ~np.isnan(v)
-                        if not ok.all():
-                            tr, tc, v, covv = tr[ok], tc[ok], v[ok], covv[ok]
-                            rr, cc = rr[ok], cc[ok]
-                        if len(v) == 0:
-                            continue
-                    n = len(v)
-                    # cell centers in world coords, at sampling resolution
-                    cx = samp.xmin + (cc + 0.5) * samp.dx
-                    cy = samp.ymax - (rr + 0.5) * samp.dy
-                    area = cell_areas(samp, rr, spherical) if need_area else None
-                    if coverage_area:
-                        covv = covv * area
-                    if area_weights:
-                        w = area
-                    elif has_w:
-                        w = np.full(n, np.nan)
-                        wtiles = row.wtiles if row.wtiles is not None else []
-                        for wt in wtiles:
-                            wpx = np.asarray(wt["px"], dtype=np.float64).reshape(
-                                int(wt["nrows"]), int(wt["ncols"])
-                            )
-                            wr = np.floor((wt["ymax"] - cy) / wt["dy"]).astype(np.int64)
-                            wc = np.floor((cx - wt["xmin"]) / wt["dx"]).astype(np.int64)
-                            sel = (
-                                (wr >= 0)
-                                & (wr < int(wt["nrows"]))
-                                & (wc >= 0)
-                                & (wc < int(wt["ncols"]))
-                            )
-                            if sel.any():
-                                w[sel] = wpx[wr[sel], wc[sel]]
-                        if default_weight is not None:
-                            w = np.where(np.isnan(w), default_weight, w)
-                    else:
-                        w = np.full(n, np.nan)
-                    if emit == "moments":
-                        # one scalar row per pair, accumulated as plain
-                        # python lists — a pandas frame per pair costs more
-                        # than the moments themselves
-                        cw = covv * w
-                        vc = v * covv
-                        vcw = v * cw
-                        moments_tuple = (
-                            covv.sum(),
-                            vc.sum(),
-                            (v * vc).sum(),
-                            cw.sum(),
-                            vcw.sum(),
-                            (v * vcw).sum(),
-                            v.min(),
-                            v.max(),
-                        )
-                        if by_layer:
-                            # multi-layer single pass: tag with this tile
-                            # row's layer so one scan serves every layer
-                            outs.append((feature_id, row.layer) + moments_tuple)
-                        else:
-                            outs.append((feature_id,) + moments_tuple)
-                        continue
-                    if emit == "freq":
-                        uv, inv = np.unique(v, return_inverse=True)
-                        sum_c = np.bincount(inv, weights=covv)
-                        sum_cw = np.bincount(inv, weights=covv * w)
-                        rec_f = (
-                            np.full(len(uv), feature_id, np.int64),
-                            uv,
-                            sum_c,
-                            sum_cw,
-                        )
-                        if by_layer:
-                            # multi-layer single pass: tag with this tile
-                            # row's layer (same as the moments emit)
-                            rec_f = (
-                                rec_f[0],
-                                np.full(len(uv), row.layer, dtype=object),
-                            ) + rec_f[1:]
-                        outs.append(rec_f)
-                        continue
-                    # 1-based row-major cell index of the VALUE raster, even
-                    # when disaggregated (ref raster_utils.cpp:53-118)
-                    grow = int(round((raster_ymax - tile_grid.ymax) / tile_grid.dy)) + tr
-                    gcol = int(round((tile_grid.xmin - raster_xmin) / tile_grid.dx)) + tc
-                    cell = (grow * raster_width + gcol + 1).astype(np.int64)
-                    outs.append(
-                        (np.full(n, feature_id, dtype=np.int64), v, w, covv, cell, cx, cy, area)
-                    )
-            if outs:
-                # ONE frame per Arrow batch (np.concatenate of column
-                # arrays), not a pandas concat of per-pair frames
-                if emit == "moments":
-                    cols = list(zip(*outs))
-                    data = {_out_cols[0]: np.asarray(cols[0], dtype=np.int64)}
-                    for i, name in enumerate(_out_cols):
-                        if i == 0:
-                            continue
-                        if name == "layer":
-                            data[name] = list(cols[i])
-                        else:
-                            data[name] = np.asarray(cols[i], dtype=np.float64)
-                    yield pd.DataFrame(data)
-                else:
-                    cols = list(zip(*outs))
-                    yield pd.DataFrame(
-                        {
-                            name: np.concatenate(cols[i])
-                            for i, name in enumerate(_out_cols)
-                        }
-                    )
+                    pairs.append((len(tiles) - 1, feature_id, sub, samp, geom))
+            chunks = [
+                _chunk_facts(tiles, pairs[a:b])
+                for a, b in budget_chunks([p[3].size for p in pairs], budget)
+            ]
+            chunks = [c for c in chunks if c is not None]
+            if chunks:
+                # ONE frame per Arrow batch
+                yield pd.DataFrame(
+                    {
+                        name: np.concatenate([c[i] for c in chunks])
+                        for i, name in enumerate(_out_cols)
+                    }
+                )
 
     if emit == "moments":
         schema = MOMENTS_SCHEMA
@@ -1112,7 +1147,13 @@ def backfill(
 def _freq_stats(plan: StatsPlan, freq_df: DataFrame) -> DataFrame:
     """Frequency-map stats over groupBy(fid, v): mode/minority/variety/
     median/quantile/frac/weighted_frac (ref raster_stats.h:176-230, 281-304,
-    393-411)."""
+    393-411).
+
+    NaN/NULL contract of median and quantile: they skip NaN and NULL
+    values, so a feature whose frequency rows are all NaN has no quantile
+    row. Joined with any other stat its median and quantile are NULL (not
+    NaN); asked alone, the feature has no row and ``backfill`` adds it
+    with NULL."""
     pieces: list[DataFrame] = []
     fid = F.col("feature_id")
 

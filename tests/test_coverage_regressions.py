@@ -2,7 +2,10 @@
 (/root/reference/src/exactextract/test/test_raster_cell_intersection.cpp:440-614).
 
 The WKT resource files are read from the reference tree (read-only) — they
-are test DATA, not code.
+are test DATA, not code. The stressors at the end cover the same failure
+modes (antimeridian, many-ring multipolygons, slivers, near-degenerate
+edges, exact sums) from geometry built here, each run alone and inside one
+batched ``coverage_fraction_many`` call.
 """
 
 from pathlib import Path
@@ -10,7 +13,8 @@ from pathlib import Path
 import numpy as np
 import pytest
 
-from exactextractr_spark.core.coverage import coverage_fraction
+from exactextractr_spark.core import coverage
+from exactextractr_spark.core.coverage import coverage_fraction, coverage_fraction_many
 from exactextractr_spark.core.geom import from_wkt
 from exactextractr_spark.core.grid import Box, Grid
 
@@ -168,3 +172,146 @@ def test_regression7_degenerate_sliver():
     # coordinate magnitude ~5e6, so compare with an absolute fraction fuzz
     assert cov.min() >= -1e-12
     assert cov.max() <= max_frac + 1e-9
+
+
+# ---------------------------------------------------------------------------
+# self-contained stressors
+# ---------------------------------------------------------------------------
+
+#: ordinary pairs that share each stressor's batched call
+ORDINARY = [
+    (Grid(0, 0, 3, 3, 1, 1),
+     from_wkt("POLYGON ((0.5 0.5, 2.5 0.5, 2.5 2.5, 0.5 2.5, 0.5 0.5))")),
+    (Grid(-2, -1, 5, 4, 0.5, 0.25),
+     from_wkt("POLYGON ((-1 0, 4 -0.5, 3.3 3.7, -1.5 2, -1 0), (0 1, 1 2, 2 1, 0 1))")),
+]
+
+
+def alone_and_batched(grid: Grid, geom) -> np.ndarray:
+    """Coverage of one pair, asserted bit-identical when the pair runs
+    between ordinary pairs in one batched call (and the ordinary pairs
+    unchanged by their neighbour)."""
+    alone = coverage_fraction(grid, geom)
+    (g0, p0), (g1, p1) = ORDINARY
+    batch = coverage_fraction_many([g0, grid, g1], [p0, geom, p1])
+    assert batch[1].shape == alone.shape
+    assert batch[1].tobytes() == alone.tobytes()
+    assert batch[0].tobytes() == coverage_fraction(g0, p0).tobytes()
+    assert batch[2].tobytes() == coverage_fraction(g1, p1).tobytes()
+    return alone
+
+
+def box_wkt(x0, y0, x1, y1) -> str:
+    return f"({x0!r} {y0!r}, {x1!r} {y0!r}, {x1!r} {y1!r}, {x0!r} {y1!r}, {x0!r} {y0!r})"
+
+
+def assert_area(grid: Grid, cov: np.ndarray, area: float, rel: float) -> None:
+    assert np.isfinite(cov).all()
+    assert cov.min() >= 0.0
+    assert cov.max() <= 1.0 + 1e-12
+    assert abs(cov.sum() * grid.dx * grid.dy - area) <= rel * area
+
+
+@pytest.mark.parametrize(
+    "wkt",
+    [
+        "POLYGON (" + box_wkt(179.3, -17.2, 180.0, -16.1) + ")",
+        "POLYGON (" + box_wkt(-180.0, -17.2, -179.4, -16.1) + ")",
+        "MULTIPOLYGON ((" + box_wkt(179.25, -1.0, 180.0, 1.0) + "), (("
+        + box_wkt(-180.0, -1.0, -179.75, 1.0)[1:-1] + ")))",
+    ],
+)
+def test_stress_boxes_touching_antimeridian(wkt):
+    geom = from_wkt(wkt)
+    # a global half-degree grid whose outer edges lie ON longitude ±180
+    world = Grid(-180, -90, 180, 90, 0.5, 0.5)
+    for grid in (world, world.crop(Box(*geom.bounds()))):
+        cov = alone_and_batched(grid, geom)
+        assert_area(grid, cov, geom.area(), 1e-12)
+    # the reference's Fiji grid, whose edges lie half a cell beyond ±180
+    fiji = Grid(-180.5, -90.5, 180.5, 90.5, 0.5, 0.5).crop(Box(*geom.bounds()))
+    assert_area(fiji, alone_and_batched(fiji, geom), geom.area(), 1e-12)
+
+
+def many_ring_multipolygon() -> str:
+    polys = []
+    for i in range(5):
+        for j in range(4):
+            x, y = 0.37 + 2.1 * i, 0.21 + 2.3 * j
+            holes = [box_wkt(x + 0.2, y + 0.3, x + 0.7, y + 0.9),
+                     box_wkt(x + 1.0, y + 1.1, x + 1.6, y + 1.45)]
+            ring = (f"({x!r} {y!r}, {x + 1.9!r} {y + 0.1!r}, {x + 1.8!r} {y + 2.0!r}, "
+                    f"{x + 0.1!r} {y + 1.7!r}, {x!r} {y!r})")
+            polys.append("(" + ", ".join([ring] + holes) + ")")
+    return "MULTIPOLYGON (" + ", ".join(polys) + ")"
+
+
+def test_stress_multipolygon_with_many_rings_and_holes(monkeypatch):
+    geom = from_wkt(many_ring_multipolygon())
+    assert sum(len(rings) for rings in geom.polygons()) >= 50
+    grid = Grid(0, 0, 11, 10, 0.25, 0.25)
+    cov = alone_and_batched(grid, geom)
+    assert_area(grid, cov, geom.area(), 1e-12)
+    # the multipolygon covers what its parts cover
+    parts = sum(coverage_fraction(grid, p) for p in geom.parts)
+    np.testing.assert_allclose(cov, parts, rtol=0, atol=1e-12)
+    # rings sliced over several deposits combine into the same bits
+    monkeypatch.setattr(coverage, "CELL_BUDGET", 3 * grid.size)
+    assert coverage_fraction_many([grid], [geom])[0].tobytes() == cov.tobytes()
+
+
+@pytest.mark.parametrize(
+    "wkt",
+    [
+        # vertical sliver 1e-9 of a cell wide, crossing three rows
+        "POLYGON ((1.3 0.2, 1.300000001 0.2, 1.300000001 2.8, 1.3 2.8, 1.3 0.2))",
+        # slanted sliver crossing rows and columns
+        "POLYGON ((0.2 0.1, 2.7 2.9, 2.700000001 2.9, 0.200000001 0.1, 0.2 0.1))",
+        # horizontal sliver along a row boundary
+        "POLYGON ((0.1 1.0, 2.9 1.0, 2.9 1.000000001, 0.1 1.000000001, 0.1 1.0))",
+    ],
+)
+def test_stress_slivers(wkt):
+    geom = from_wkt(wkt)
+    grid = Grid(0, 0, 3, 3, 1, 1)
+    cov = alone_and_batched(grid, geom)
+    assert np.isfinite(cov).all()
+    assert cov.min() >= 0.0
+    assert cov.max() <= 1e-9 + 1e-15
+    # a sliver's fractions are the difference of two nearly equal terms,
+    # so its area holds to an absolute, not relative, bound
+    assert abs(cov.sum() - geom.area()) <= 1e-14
+
+
+def test_stress_vertices_one_ulp_apart():
+    x = 1.5
+    xn = float(np.nextafter(x, 2.0))
+    y = 0.75
+    yn = float(np.nextafter(y, 1.0))
+    geom = from_wkt(
+        f"POLYGON ((0.25 0.25, {x!r} {y!r}, {xn!r} {y!r}, {xn!r} {yn!r}, "
+        f"2.75 2.5, 0.5 2.75, 0.25 0.25))"
+    )
+    spike = from_wkt(
+        f"POLYGON ((0.5 0.5, 2.5 0.5, {x!r} 2.5, {xn!r} 2.5, 0.5 0.5))"
+    )
+    grid = Grid(0, 0, 3, 3, 1, 1)
+    for g in (geom, spike):
+        cov = alone_and_batched(grid, g)
+        assert_area(grid, cov, g.area(), 1e-12)
+    # the 1-ULP edge vertices land in one cell on two grids that split there
+    fine = Grid(0, 0, 3, 3, 0.75, 0.75)
+    assert_area(fine, alone_and_batched(fine, geom), geom.area(), 1e-12)
+
+
+def test_stress_exact_sum_matches_shoelace():
+    # dyadic vertices: every intermediate is exact, so the per-cell sum
+    # reproduces the shoelace area to 1e-12
+    geom = from_wkt(
+        "POLYGON ((0.0625 0.3125, 2.8125 0.0625, 2.9375 2.6875, 1.5 1.25, "
+        "0.4375 2.9375, 0.0625 0.3125), (0.5 0.5, 1.0 0.625, 0.75 1.0, 0.5 0.5))"
+    )
+    for grid in (Grid(0, 0, 3, 3, 0.25, 0.25), Grid(0, 0, 3, 3, 1, 1),
+                 Grid(-0.5, -0.25, 3.5, 3.25, 0.5, 0.125)):
+        cov = alone_and_batched(grid, geom)
+        assert_area(grid, cov, geom.area(), 1e-12)

@@ -544,3 +544,29 @@ def test_quantile_continuous_distributed_parity(spark):
         names = ["median", "q10", "q25", "q50", "q75", "q90"]
         for nm, e in zip(names, expect):
             assert row[nm] == e, (fid, nm, row[nm], e)
+
+
+def test_quantile_of_all_nan_feature_is_null(spark):
+    """The quantile NaN/NULL contract of ``_freq_stats``: median and
+    quantile skip NaN and NULL values, so a feature whose frequency rows are
+    all NaN has no quantile row. Next to any other stat its median and
+    quantile are NULL (the full join); asked alone, the feature has no row
+    (``backfill`` then adds it with NULL)."""
+    from exactextractr_spark.operators.zonal import FREQ_SCHEMA, stats_from_freq
+    from exactextractr_spark.plans.stats import StatsPlan
+
+    nan = float("nan")
+    freq = spark.createDataFrame(
+        [(1, nan, 1.5, nan), (2, 3.0, 1.0, nan), (2, 5.0, 1.0, nan)], FREQ_SCHEMA
+    )
+    got = {
+        r["feature_id"]: r
+        for r in stats_from_freq(
+            StatsPlan(["count", "median", "quantile"], [0.25]), freq
+        ).collect()
+    }
+    assert got[1]["count"] == 1.5
+    assert got[1]["median"] is None and got[1]["q25"] is None
+    assert got[2]["median"] == 4.0 and got[2]["q25"] == 3.5
+    alone = stats_from_freq(StatsPlan(["median", "quantile"], [0.25]), freq)
+    assert sorted(r["feature_id"] for r in alone.collect()) == [2]

@@ -179,7 +179,9 @@ def test_multi_tile_resample_unaligned(spark):
 
 def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
     """Above BROADCAST_FEATURE_LIMIT, build_candidates must route to the
-    distributed cover join WITHOUT collecting geometries to the driver."""
+    distributed cover join WITHOUT collecting geometries to the driver.
+    A zero fused-collect cap forces the count-first order, the one a table
+    too large to estimate as collectable takes."""
     from exactextractr_spark.operators import zonal
     from exactextractr_spark.sources.features import features_from_wkt
 
@@ -193,7 +195,8 @@ def test_large_feature_table_skips_driver_collect(spark, monkeypatch):
                 "POLYGON ((1 4, 2 4, 2 5, 1 5, 1 4))"]
     )
     monkeypatch.setattr(zonal, "BROADCAST_FEATURE_LIMIT", 2)
-    from pyspark.sql import DataFrame as SparkDF
+    monkeypatch.setattr(zonal, "_FUSED_COLLECT_MAX_BYTES", 0)
+    SparkDF = type(feats)  # the concrete class that defines collect
 
     real_collect = SparkDF.collect
 
